@@ -8,7 +8,7 @@ import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -88,14 +88,24 @@ object LogfmtDataSource {
     Try(SparkSession.active.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
+  /** The data files under `path` (a file, a directory or a glob), in
+    * path order. A path that matches nothing fails with Spark's own
+    * `PATH_NOT_FOUND`, naming the path, as the built-in file sources do
+    * on a batch read — not a zero-column empty table. The micro-batch
+    * stream lists with `mustExist = false`: a directory that does not
+    * exist yet holds no new files.
+    */
   private[sources] def listFiles(options: CaseInsensitiveStringMap,
-      conf: Configuration): Seq[FileStatus] = {
+      conf: Configuration, mustExist: Boolean = true): Seq[FileStatus] = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "graft-logfmt: 'path' option is required"))
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val matched = Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq
+    if (matched.isEmpty && mustExist)
+      throw new AnalysisException("PATH_NOT_FOUND",
+        Map("path" -> fs.makeQualified(p).toString))
     val expanded = matched.flatMap { st =>
       if (st.isDirectory)
         fs.listStatus(st.getPath).toSeq.filter(_.isFile)
@@ -465,7 +475,7 @@ private[sources] class LogfmtMicroBatchStream(scan: LogfmtScan,
   override def initialOffset(): Offset = LogfmtOffset("")
 
   override def latestOffset(): Offset = {
-    val names = LogfmtDataSource.listFiles(options, conf)
+    val names = LogfmtDataSource.listFiles(options, conf, mustExist = false)
       .map(_.getPath.getName)
     LogfmtOffset(if (names.isEmpty) "" else names.max)
   }
@@ -486,7 +496,7 @@ private[sources] class LogfmtMicroBatchStream(scan: LogfmtScan,
     val lo = start.asInstanceOf[LogfmtOffset].maxName
     val hi = end.asInstanceOf[LogfmtOffset].maxName
     LogfmtDataSource.chunksOf(
-      LogfmtDataSource.listFiles(options, conf).filter { st =>
+      LogfmtDataSource.listFiles(options, conf, mustExist = false).filter { st =>
         val n = st.getPath.getName
         n > lo && n <= hi
       },

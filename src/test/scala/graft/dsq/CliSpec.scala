@@ -17,8 +17,10 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("-f disables query-vs-file heuristic") {
-    val Right(a) = Cli.parse(Array("-f",
-      "/root/reference/testdata/sql/simple.sql", "my data.csv")): @unchecked
+    // FIXTURES.md §1
+    val sql = SparkSpec.fixture("sql/simple.sql",
+      """SELECT " Name " FROM {} LIMIT 3""")
+    val Right(a) = Cli.parse(Array("-f", sql, "my data.csv")): @unchecked
     assert(a.files == Seq("my data.csv"))
     assert(a.query.exists(_.contains("SELECT")))
   }
@@ -52,8 +54,8 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("-f with empty SQL file errors") {
-    assert(Cli.parse(Array("f.csv", "-f",
-      "/root/reference/testdata/sql/empty.sql")) == Left("SQL file is empty."))
+    val sql = SparkSpec.fixture("sql/empty.sql", "")
+    assert(Cli.parse(Array("f.csv", "-f", sql)) == Left("SQL file is empty."))
   }
 
   test("-v prints version string") {
@@ -193,7 +195,7 @@ class CliPipeSpec extends SparkSpec {
     test(s"pipe: cat userdata.$fmt | dsq -s $fmt query") {
       val (code, out) = runCli(
         Array("-s", fmt, "SELECT COUNT(1) AS c FROM {}"),
-        s"$td/userdata.$fmt")
+        refFixture(s"userdata.$fmt"))
       assert(code == 0, s"exit $code, out: $out")
       assert(canonJson(out) == canonJson("""[{"c":1000}]"""))
     }
@@ -209,7 +211,7 @@ class CliPipeSpec extends SparkSpec {
     ("logfmt", "logfmt/log.logfmt", 5))) {
     test(s"pipe: cat $file | dsq -s $fmt query") {
       val (code, out) = runCli(
-        Array("-s", fmt, "SELECT COUNT(1) AS c FROM {}"), s"$td/$file")
+        Array("-s", fmt, "SELECT COUNT(1) AS c FROM {}"), refFixture(file))
       assert(code == 0, s"exit $code, out: $out")
       assert(canonJson(out) == canonJson(s"""[{"c":$n}]"""))
     }
@@ -228,7 +230,7 @@ class CliPipeSpec extends SparkSpec {
     test(s"pipe: full-MIME -s $mime matches -s $fmt") {
       val (code, out) = runCli(
         Array("-s", mime, "SELECT COUNT(1) AS c FROM {}"),
-        s"$td/userdata.$fmt")
+        refFixture(s"userdata.$fmt"))
       assert(code == 0, s"exit $code, out: $out")
       assert(canonJson(out) == canonJson("""[{"c":1000}]"""))
     }
@@ -237,11 +239,11 @@ class CliPipeSpec extends SparkSpec {
   test("pipe: full-MIME -s text/logfmt and application/yaml resolve") {
     val (c1, o1) = runCli(
       Array("-s", "text/logfmt", "SELECT COUNT(1) AS c FROM {}"),
-      s"$td/logfmt/log.logfmt")
+      refFixture("logfmt/log.logfmt"))
     assert(c1 == 0 && canonJson(o1) == canonJson("""[{"c":5}]"""))
     val (c2, o2) = runCli(
       Array("-s", "application/yaml", "SELECT COUNT(1) AS c FROM {}"),
-      s"$td/yaml/userdata.yaml")
+      refFixture("yaml/userdata.yaml"))
     assert(c2 == 0 && canonJson(o2) == canonJson("""[{"c":5}]"""))
   }
 
@@ -265,7 +267,7 @@ class CliPipeSpec extends SparkSpec {
     try {
       val (code, _) = runCli(
         Array("-s", "nope", "SELECT COUNT(1) AS c FROM {}"),
-        s"$td/convert.csv")
+        convertCsv)
       assert(code == 1)
       assert(errBuf.toString("UTF-8").contains("Unknown mimetype: nope."))
     } finally System.setErr(oldErr)
@@ -347,7 +349,7 @@ class CliPipeSpec extends SparkSpec {
     try {
       val (code, _) = runCli(
         Array("-s", "text/unknownformat", "SELECT 1 FROM {}"),
-        s"$td/convert.csv")
+        convertCsv)
       assert(code == 1)
       assert(errBuf.toString("UTF-8")
         .contains("Unknown mimetype: text/unknownformat."))
@@ -392,7 +394,7 @@ class CliPipeSpec extends SparkSpec {
   }
 
   test("pipe without query dumps the stdin table (S16)") {
-    val (code, out) = runCli(Array("-s", "csv"), s"$td/convert.csv")
+    val (code, out) = runCli(Array("-s", "csv"), convertCsv)
     assert(code == 0)
     assert(canonJson(out) == canonJson(
       """[{"test":"1"},{"test":"1.1"},{"test":"+1"},
@@ -404,7 +406,7 @@ class CliPipeSpec extends SparkSpec {
     val oldErr = System.err
     System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
     try {
-      val (code, _) = runCli(Array[String](), s"$td/convert.csv")
+      val (code, _) = runCli(Array[String](), convertCsv)
       assert(code == 1)
       assert(errBuf.toString("UTF-8").contains("No input files."))
     } finally System.setErr(oldErr)
@@ -426,7 +428,7 @@ class CliPipeSpec extends SparkSpec {
       Array("-s", "csv",
         "SELECT graft_jaccard_sorted(array(1L, 2L, 3L), array(2L, 3L, 4L))" +
           " AS j FROM {} LIMIT 1"),
-      s"$td/convert.csv")
+      convertCsv)
     assert(code == 0, s"exit $code, out: $out")
     assert(canonJson(out) == canonJson("""[{"j":0.5}]"""))
   }
@@ -438,7 +440,7 @@ class CliPipeSpec extends SparkSpec {
     try {
       val deep = "SELECT test" +
         (1 to 9).map(i => s"->'k$i'").mkString + " FROM {}"
-      val Right(args) = Cli.parse(Array(s"$td/convert.csv", deep)): @unchecked
+      val Right(args) = Cli.parse(Array(convertCsv, deep)): @unchecked
       assert(Cli.run(args) == 1)
       assert(errBuf.toString("UTF-8") ==
         "Unsupported JSON arrow chain depth (max 5); " +
@@ -453,14 +455,14 @@ class CliPipeSpec extends SparkSpec {
     try {
       val (code, _) = runCli(
         Array("--verbose", "-s", "csv", "SELECT COUNT(1) AS c FROM {}"),
-        s"$td/convert.csv")
+        convertCsv)
       assert(code == 0)
       val err = errBuf.toString("UTF-8")
       assert(err.contains("Ingested") && err.contains("as csv:")
         && err.contains("6 rows"), s"verbose stderr was: $err")
       errBuf.reset()
       val (code2, _) = runCli(
-        Array("-s", "csv", "SELECT COUNT(1) AS c FROM {}"), s"$td/convert.csv")
+        Array("-s", "csv", "SELECT COUNT(1) AS c FROM {}"), convertCsv)
       assert(code2 == 0)
       assert(!errBuf.toString("UTF-8").contains("Ingested"),
         s"non-verbose run logged: $errBuf")
@@ -507,7 +509,7 @@ class CliPipeSpec extends SparkSpec {
       val outBuf = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(outBuf, true, "UTF-8")) {
         val Right(a) = Cli.parse(
-          (extra ++ Seq("-D", s"$td/convert.csv")).toArray, Map.empty): @unchecked
+          (extra ++ Seq("-D", convertCsv)).toArray, Map.empty): @unchecked
         assert(Cli.run(a) == 0)
       }
       outBuf.toString("UTF-8").trim

@@ -5,16 +5,20 @@ package graft.dsq
   */
 class GoldenCorpusSpec extends SparkSpec {
 
+  // FIXTURES.md §5
+  private lazy val regr36 =
+    SparkSpec.fixture("regr/36.json", """[{"a":1,"b":2,"c":[1,2]}]""")
+
   // test.py:117-125 — COUNT(1)=1000 per format
   for (fmt <- Seq("csv", "tsv", "parquet", "json", "jsonl", "xlsx", "ods")) {
     test(s"SQL count for $fmt file") {
-      val out = run(Seq(s"$td/userdata.$fmt"), "SELECT COUNT(1) AS c FROM {}")
+      val out = run(Seq(refFixture(s"userdata.$fmt")), "SELECT COUNT(1) AS c FROM {}")
       assert(canonJson(out) == canonJson("""[{"c":1000}]"""))
     }
   }
 
   test("Join two file-tables (test.py:134-138)") {
-    val out = run(Seq(s"$td/join/users.csv", s"$td/join/ages.json"),
+    val out = run(Seq(refFixture("join/users.csv"), refFixture("join/ages.json")),
       "select {0}.name, {1}.age from {0} join {1} on {0}.id = {1}.id")
     assert(canonJson(out) == canonJson(
       """[{"age":88,"name":"Ted"},
@@ -23,7 +27,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Extract nested values (test.py:141-145)") {
-    val out = run(Seq(s"$td/nested/nested.json"),
+    val out = run(Seq(refFixture("nested/nested.json")),
       """select name, "location.city" city, "location.address.number" address_number from {}""")
     assert(canonJson(out) == canonJson(
       """[{"address_number":1002,"city":"Toronto","name":"Agarrah"},
@@ -32,66 +36,68 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Does not allow querying on non-array data (test.py:148-150)") {
+    // content from SURVEY.md §1.1
+    val f = SparkSpec.fixture("bad/not_an_array.json", """{"a": 1}""")
     val e = intercept[DsqError] {
-      run(Seq(s"$td/bad/not_an_array.json"), "SELECT * FROM {}")
+      run(Seq(f), "SELECT * FROM {}")
     }
-    assert(e.message == s"Input is not an array of objects: $td/bad/not_an_array.json.")
+    assert(e.message == s"Input is not an array of objects: $f.")
   }
 
   test("Supports filtering with REGEXP (test.py:153-155)") {
-    val out = run(Seq(s"$td/nested/nested.json"),
+    val out = run(Seq(refFixture("nested/nested.json")),
       "SELECT * FROM {} WHERE name REGEXP 'A.*'")
     assert(canonJson(out) == canonJson(
       """[{"location.address.number":1002,"location.city":"Toronto","name":"Agarrah"}]"""))
   }
 
   test("Supports table aliases (test.py:158-160)") {
-    val out = run(Seq(s"$td/nested/nested.json"),
+    val out = run(Seq(refFixture("nested/nested.json")),
       "SELECT * FROM {} u WHERE u.name REGEXP 'A.*'")
     assert(canonJson(out) == canonJson(
       """[{"location.address.number":1002,"location.city":"Toronto","name":"Agarrah"}]"""))
   }
 
   test("Supports path specification (test.py:163-165)") {
-    val out = run(Seq(s"$td/path/path.json"),
+    val out = run(Seq(refFixture("path/path.json")),
       "SELECT * FROM {0, 'data.data2'} ORDER BY id DESC")
     assert(canonJson(out) == canonJson(
       """[{"id":4,"name":"Minh2"},{"id":2,"name":"Corah2"}]"""))
   }
 
   test("Supports path specification shorthand (test.py:168-170)") {
-    val out = run(Seq(s"$td/path/path.json"),
+    val out = run(Seq(refFixture("path/path.json")),
       "SELECT * FROM {'data.data'} ORDER BY id DESC")
     assert(canonJson(out) == canonJson(
       """[{"id":3,"name":"Minh"},{"id":1,"name":"Corah"}]"""))
   }
 
   test("Supports Excel with multiple sheets (test.py:173-175)") {
-    val out = run(Seq(s"$td/excel/multiple-sheets.xlsx"),
+    val out = run(Seq(refFixture("excel/multiple-sheets.xlsx")),
       """SELECT COUNT(1) AS n FROM {0, "Sheet2"}""")
     assert(canonJson(out) == canonJson("""[{"n": 682}]"""))
   }
 
   test("Supports ORC files (test.py:178-180)") {
-    val out = run(Seq(s"$td/orc/test_data.orc"),
+    val out = run(Seq(refFixture("orc/test_data.orc")),
       """SELECT COUNT(*) FROM {} WHERE _col8="China"""")
     assert(canonJson(out) == canonJson("""[{"COUNT(*)":189}]"""))
   }
 
   test("Supports Avro files (test.py:183-185)") {
-    val out = run(Seq(s"$td/avro/test_data.avro"),
+    val out = run(Seq(refFixture("avro/test_data.avro")),
       """SELECT COUNT(*) FROM {} WHERE country="Sweden"""")
     assert(canonJson(out) == canonJson("""[{"COUNT(*)":25}]"""))
   }
 
   test("Supports YAML files (test.py:188-190)") {
-    val out = run(Seq(s"$td/yaml/userdata.yaml"),
+    val out = run(Seq(refFixture("yaml/userdata.yaml")),
       "SELECT COUNT(*) FROM {} WHERE activated=false")
     assert(canonJson(out) == canonJson("""[{"COUNT(*)":3}]"""))
   }
 
   test("Supports LogFmt log files (test.py:193-199)") {
-    val out = run(Seq(s"$td/logfmt/log.logfmt"), "SELECT level FROM {}")
+    val out = run(Seq(refFixture("logfmt/log.logfmt")), "SELECT level FROM {}")
     assert(canonJson(out) == canonJson(
       """[{"level":"debug"},
         |{"level":"info"},
@@ -101,7 +107,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Pretty column order alphabetical (test.py:207-215)") {
-    val out = engine.run(Seq(s"$td/path/path.json"), Seq(None),
+    val out = engine.run(Seq(refFixture("path/path.json")), Seq(None),
       Some("""SELECT name, id FROM {"data.data"}"""),
       DsqOptions(pretty = true))
     assert(out.trim ==
@@ -115,7 +121,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Pretty works even without query (test.py:218-225)") {
-    val out = engine.run(Seq(s"$td/regr/36.json"), Seq(None), None,
+    val out = engine.run(Seq(regr36), Seq(None), None,
       DsqOptions(pretty = true))
     assert(out.trim ==
       """+---+---+-------+
@@ -127,7 +133,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Pretty prints schema (test.py:228-239)") {
-    val out = engine.run(Seq(s"$td/regr/36.json"), Seq(None), None,
+    val out = engine.run(Seq(regr36), Seq(None), None,
       DsqOptions(pretty = true, schema = true))
     assert(out.trim ==
       """Array of
@@ -142,7 +148,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Prints schema as JSON (test.py:242-266)") {
-    val out = engine.run(Seq(s"$td/regr/36.json"), Seq(None), None,
+    val out = engine.run(Seq(regr36), Seq(None), None,
       DsqOptions(schema = true))
     assert(canonJson(out) == canonJson(
       """{"kind":"array","array":{"kind":"object","object":{
@@ -153,8 +159,8 @@ class GoldenCorpusSpec extends SparkSpec {
 
   test("Run simple query from sql file (test.py:270-276)") {
     val q = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$td/sql/simple.sql")), "UTF-8")
-    val out = run(Seq(s"$td/userdata.json"), q)
+      java.nio.file.Paths.get(refFixture("sql/simple.sql"))), "UTF-8")
+    val out = run(Seq(refFixture("userdata.json")), q)
     assert(canonJson(out) == canonJson(
       """[{" Name ":"Michelle Yost"},
         |{" Name ":"Guadalupe Schimmel II"},
@@ -162,25 +168,25 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Mode support (test.py:328-330)") {
-    val out = run(Seq(s"$td/userdata.json"),
+    val out = run(Seq(refFixture("userdata.json")),
       "SELECT mode(Activated) mostly_activated FROM {}")
     assert(canonJson(out) == canonJson("""[{"mostly_activated":1}]"""))
   }
 
   test("URL functions (test.py:333-336)") {
-    val out = run(Seq(s"$td/basic_logs.csv"),
+    val out = run(Seq(refFixture("basic_logs.csv")),
       "SELECT url_host(request) host, count(1) count FROM {} group by host")
     assert(canonJson(out) == canonJson("""[{"host":"age.com","count":2}]"""))
   }
 
   test("URL functions, split_part (test.py:338-340)") {
-    val out = run(Seq(s"$td/basic_logs.csv"),
+    val out = run(Seq(refFixture("basic_logs.csv")),
       """SELECT split_part(url_host(request), ".", -1) host, count(1) count FROM {} group by host""")
     assert(canonJson(out) == canonJson("""[{"host":"com","count":2}]"""))
   }
 
   test("No number conversion, with query (test.py:343-350)") {
-    val out = run(Seq(s"$td/convert.csv"), "SELECT * FROM {}")
+    val out = run(Seq(convertCsv), "SELECT * FROM {}")
     assert(out ==
       """[{"test":"1"},
         |{"test":"1.1"},
@@ -191,7 +197,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Number conversion, with query (test.py:352-359)") {
-    val out = run(Seq(s"$td/convert.csv"), "SELECT * FROM {}",
+    val out = run(Seq(convertCsv), "SELECT * FROM {}",
       DsqOptions(convertNumbers = true))
     assert(out ==
       """[{"test":1},
@@ -203,7 +209,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("No number conversion, no query (test.py:362-369)") {
-    val out = engine.run(Seq(s"$td/convert.csv"), Seq(None), None, DsqOptions())
+    val out = engine.run(Seq(convertCsv), Seq(None), None, DsqOptions())
     assert(out ==
       """[{"test":"1"},
         |{"test":"1.1"},
@@ -214,7 +220,7 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("Number conversion, no query (test.py:371-377)") {
-    val out = engine.run(Seq(s"$td/convert.csv"), Seq(None), None,
+    val out = engine.run(Seq(convertCsv), Seq(None), None,
       DsqOptions(convertNumbers = true))
     assert(out ==
       """[{"test":1},
@@ -226,13 +232,13 @@ class GoldenCorpusSpec extends SparkSpec {
   }
 
   test("No number conversion, does alphabet ordering (test.py:379-381)") {
-    val out = run(Seq(s"$td/csv/numberconvert.csv"),
+    val out = run(Seq(refFixture("csv/numberconvert.csv")),
       """select * from {} where score > "90"""")
     assert(canonJson(out) == canonJson("""[{"Score": "95", "Name": "Rainer"}]"""))
   }
 
   test("Number conversion, number ordering (test.py:383-386)") {
-    val out = run(Seq(s"$td/csv/numberconvert.csv"),
+    val out = run(Seq(refFixture("csv/numberconvert.csv")),
       """select * from {} where score > "90"""",
       DsqOptions(convertNumbers = true))
     assert(canonJson(out) == canonJson(
@@ -303,7 +309,7 @@ class GoldenCorpusSpec extends SparkSpec {
 
   // README.md:453-490 — Avro unions render as "Varied of", byte-exact
   test("Avro union schema renders Varied of (README.md:453-490)") {
-    val out = engine.run(Seq(s"$td/avro/test_data.avro"), Seq(None), None,
+    val out = engine.run(Seq(refFixture("avro/test_data.avro")), Seq(None), None,
       DsqOptions(pretty = true, schema = true))
     assert(out.trim ==
       """Array of
@@ -423,22 +429,26 @@ class GoldenCorpusSpec extends SparkSpec {
 
   // regressions
   test("regr #36 arrow operator (test.py:392-394)") {
-    val out = run(Seq(s"$td/regr/36.json"), "SELECT c->1 AS secondc FROM {}")
+    val out = run(Seq(regr36), "SELECT c->1 AS secondc FROM {}")
     assert(canonJson(out) == canonJson("""[{"secondc": "2"}]"""))
   }
 
   test("regr #36 array-to-string (test.py:396-398)") {
-    val out = run(Seq(s"$td/regr/36.json"), "SELECT * FROM {}")
+    val out = run(Seq(regr36), "SELECT * FROM {}")
     assert(canonJson(out) == canonJson("""[{"a": 1, "b": 2, "c": "[1,2]"}]"""))
   }
 
   test("regr #67 empty nested array (test.py:400-402)") {
-    val out = run(Seq(s"$td/regr/67.jsonl"), "SELECT COUNT(1) AS count FROM {}")
+    // FIXTURES.md §5
+    val f = SparkSpec.fixture("regr/67.jsonl", """{"foo":[]}""")
+    val out = run(Seq(f), "SELECT COUNT(1) AS count FROM {}")
     assert(canonJson(out) == canonJson("""[{"count": 1}]"""))
   }
 
   test("regr #74 near-duplicate column names (test.py:404-406)") {
-    val out = run(Seq(s"$td/regr/74.csv"), "SELECT * FROM {}")
+    // header from FIXTURES.md §5, row from the golden below
+    val f = SparkSpec.fixture("regr/74.csv", "\"a\",\"a b\"\n1,2\n")
+    val out = run(Seq(f), "SELECT * FROM {}")
     assert(canonJson(out) == canonJson("""[{"a": "1", "a b": "2"}]"""))
   }
 

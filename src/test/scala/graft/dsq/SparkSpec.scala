@@ -1,5 +1,7 @@
 package graft.dsq
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -25,9 +27,42 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     engine.run(files, files.map(_ => None), Some(query), opts)
 
   val td = "/root/reference/testdata"
+
+  /** A fixture of the dsq checkout's testdata/ under `td`, for the goldens
+    * whose file content no document states. Without the checkout the
+    * test is canceled, not failed; with it, the test runs unchanged.
+    */
+  def refFixture(rel: String): String = {
+    val p = s"$td/$rel"
+    assume(Files.isRegularFile(Paths.get(p)), s"reference fixture not present: $p")
+    p
+  }
+
+  /** convert.csv: one column `test` and the six values of the golden at
+    * test.py:362-369.
+    */
+  lazy val convertCsv: String =
+    SparkSpec.fixture("convert.csv", "test\n1\n1.1\n+1\n01\n001\n0001.1\n")
 }
 
 object SparkSpec {
+  /** Writes `content` to `rel` (e.g. "regr/36.json") under a fresh temp
+    * dir and returns the file's path. The file name and extension are
+    * kept, since the reader is picked from the extension.
+    */
+  def fixture(rel: String, content: String): String = {
+    val dir = Files.createTempDirectory("dsq_fixture")
+    dir.toFile.deleteOnExit()
+    val f = dir.resolve(rel)
+    if (f.getParent != dir) {
+      Files.createDirectories(f.getParent)
+      f.getParent.toFile.deleteOnExit()
+    }
+    Files.writeString(f, content)
+    f.toFile.deleteOnExit()
+    f.toString
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -198,6 +198,28 @@ class LogfmtSourceSpec extends SparkSpec {
     assert(forced.head().getString(0) == "1")
   }
 
+  test("batch read of a path that matches nothing fails naming the path") {
+    val missing = Files.createTempDirectory("graft_dsv2_missing")
+      .resolve("absent.logfmt").toString
+    def pathNotFound(read: => Any): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](read)
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      assert(e.getMessage.contains(missing), e.getMessage)
+    }
+    pathNotFound(spark.read.format("graft-logfmt").load(missing))
+    pathNotFound(spark.read.format("graft-logfmt")
+      .option("sampleLines", Int.MaxValue.toString).load(missing))
+    pathNotFound(spark.read.format("graft-logfmt")
+      .schema("level STRING").load(missing).count())
+    pathNotFound(spark.read.format("graft-apacheerror").load(missing).count())
+    pathNotFound(spark.read.format("graft-accesslog").load(missing).count())
+    // the micro-batch stream still reads a missing directory as no files
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", missing))
+    val stream = new LogfmtMicroBatchStream(new LogfmtScan(StructType(Nil), opts), opts)
+    assert(stream.latestOffset() == LogfmtOffset(""))
+  }
+
   test("sampleLines=max: distributed whole-file union sees a last-line key") {
     // the CLI contract: at sampleLines=Int.MaxValue every line
     // contributes to the schema — since this runs as a Spark job (not a
