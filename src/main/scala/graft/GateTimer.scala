@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic gate timer for scale validation: runs named SparkEntry
   * queries against a given table dir (e.g. a ScaleGen 10× output) and
   * prints one JSON line of per-gate seconds. Complements Bench (fixed
@@ -17,15 +15,8 @@ object GateTimer {
     val dir = args(0)
     val prefixes = args(1).split(",").toSeq
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", "32", "WARN")
     val selected = SparkEntry.queries.filter { case (n, _) =>
       prefixes.exists(n.startsWith) }.toSeq.sortBy(_._1)
     if (selected.isEmpty) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -19,15 +18,8 @@ object JobProf {
     val dir = args(0)
     val name = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", "32", "ERROR")
 
     case class JobRec(id: Int, var desc: String = "", var t0: Long = 0,
       var t1: Long = 0, var stages: Seq[Int] = Nil)

@@ -97,20 +97,16 @@ object Cli {
     Right(Args(files, sqlQuery, opts))
   }
 
-  def buildSession(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("DSQ_SPARK_MASTER", "local[*]"))
-      .appName("dsq")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("DSQ_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+  def buildSession(): SparkSession =
+    graft.LocalSession(sys.env.getOrElse("DSQ_SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("DSQ_SHUFFLE_PARTITIONS", "32"), "ERROR",
+      "spark.app.name" -> "dsq")
+
+  /** What an unexpected failure prints: its message, or its class name
+    * when it has none (an NPE would otherwise print "null").
+    */
+  private[dsq] def errorText(e: Throwable): String =
+    Option(e.getMessage).filter(_.nonEmpty).getOrElse(e.getClass.getName)
 
   /** help and version are successful exits (reference main.go:369-373);
     * every other Left from parse is a usage error.
@@ -147,22 +143,18 @@ object Cli {
         System.err.println("No input files.")
         return 1
       }
-      val engine = new Engine(buildSession())
       if (args.opts.dumpCacheFile) {
-        // same optsKey derivation as Engine.runQuery — `-D -n` must print
-        // the directory a subsequent `-C -n` run would actually use
-        val cache = new ContentHashCache(engine.spark, files, enabled = true,
-          optsKey = if (args.opts.convertNumbers) "n" else "")
-        println(cache.cacheDir.toString)
+        println(ContentHashCache.dirFor(files, args.opts.convertNumbers))
         return 0
       }
+      val engine = new Engine(buildSession())
       if (args.opts.interactive) return Repl.loop(engine, files, mimes, args.opts)
       print(engine.run(files, mimes, args.query, args.opts))
       println()
       0
     } catch {
       case DsqError(msg) => System.err.println(msg); 1
-      case e: Exception => System.err.println(e.getMessage); 1
+      case e: Exception => System.err.println(errorText(e)); 1
     }
   }
 }
@@ -202,7 +194,7 @@ object Repl {
           print(sb)
         } catch {
           case DsqError(msg) => System.err.println(msg)
-          case e: Exception => System.err.println(e.getMessage)
+          case e: Exception => System.err.println(Cli.errorText(e))
         } finally engine.releaseCaches()
       }
     }

@@ -103,9 +103,8 @@ final class Engine(val spark: SparkSession) {
   def runQuery(files: Seq[String], mimes: Seq[Option[String]],
       query: String, opts: DsqOptions): DataFrame = {
     val (macroReplaced, refs) = Dialect.extractTableRefs(query)
-    // option flags that change ingestion output are part of the cache key
     val cache = new ContentHashCache(spark, files, opts.cacheEnabled,
-      optsKey = if (opts.convertNumbers) "n" else "")
+      opts.convertNumbers)
 
     var allColumns = Set.empty[String]
     refs.foreach { r =>
@@ -203,23 +202,10 @@ final class Engine(val spark: SparkSession) {
   * the same ~13× cold/warm gap the reference exploits, but columnar.
   */
 final class ContentHashCache(spark: SparkSession, files: Seq[String],
-    enabled: Boolean, optsKey: String = "") {
+    enabled: Boolean, convertNumbers: Boolean = false) {
 
-  lazy val cacheDir: java.nio.file.Path = {
-    val md = java.security.MessageDigest.getInstance("SHA-1")
-    files.foreach { f =>
-      val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f))
-      try {
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n > 0) { md.update(buf, 0, n); n = in.read(buf) }
-      } finally in.close()
-    }
-    val hash = md.digest().map("%02x".format(_)).mkString
-    val suffix = if (optsKey.isEmpty) "" else s"-$optsKey"
-    Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"dsqspark-cache-$hash$suffix")
-  }
+  lazy val cacheDir: java.nio.file.Path =
+    ContentHashCache.dirFor(files, convertNumbers)
 
   private var warnedInvalid = false
 
@@ -245,5 +231,29 @@ final class ContentHashCache(spark: SparkSession, files: Seq[String],
       df.write.mode("overwrite").parquet(target.toString)
       (spark.read.parquet(target.toString), Some(false))
     }
+  }
+}
+
+object ContentHashCache {
+
+  /** `$TMPDIR/dsqspark-cache-<sha1 of all file contents>`, suffixed
+    * `-n` under `-n`: option flags that change ingestion output are part
+    * of the key. `dsq -D` prints this without building a session.
+    */
+  def dirFor(files: Seq[String],
+      convertNumbers: Boolean): java.nio.file.Path = {
+    val md = java.security.MessageDigest.getInstance("SHA-1")
+    files.foreach { f =>
+      val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f))
+      try {
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n > 0) { md.update(buf, 0, n); n = in.read(buf) }
+      } finally in.close()
+    }
+    val hash = md.digest().map("%02x".format(_)).mkString
+    val suffix = if (convertNumbers) "-n" else ""
+    Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"dsqspark-cache-$hash$suffix")
   }
 }

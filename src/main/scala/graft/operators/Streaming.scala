@@ -3,47 +3,17 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.streaming.Streams
+import graft.streaming.Streams.{rmTree, writeSingle, writeSplitSingle}
 
 /** Structured Streaming queries under the driver gate: each executes a
-  * real streaming job (AvailableNow → memory sink, complete mode) whose
-  * final state must equal the batch oracle.
+  * real streaming job whose final state must equal the batch oracle.
+  * The event-stream gates run AvailableNow into a memory sink
+  * (`Streams.runToMemory`); the rest stage their input as single-file
+  * parquet batches under `Streams.scratch` and replay them through
+  * `Streams.replay`, so each keeps only its staging, its per-batch
+  * body and its publish-time readout.
   */
 object Streaming {
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** Run `body` (a streaming query start + await) with
-    * `spark.sql.shuffle.partitions` bounded to the streaming default
-    * the memory-sink gates already use (Streams.runToMemory's setting,
-    * extended to the foreachBatch gates): AQE partition coalescing is
-    * DISABLED inside Structured Streaming, so each micro-batch's
-    * aggregations otherwise run the session's full 32 reduce tasks
-    * over a few thousand rows — pure scheduler overhead × shuffles ×
-    * batches (optimization guide §2.2; AQE would coalesce these to 1-2
-    * partitions in a batch job). Partition count never changes any
-    * gate's RESULT (every carried state is partition-order-independent
-    * by construction — the split-merge seam fuzz specs). Production
-    * streams size this by expected per-batch volume; the bound is the
-    * gate-scale value, restored after the stream completes so
-    * publish-time batch plans keep the session's parallelism (and AQE).
-    */
-  private def withStreamShuffle[T](s: org.apache.spark.sql.SparkSession,
-      srcDir: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // VOLUME-ADAPTIVE (r15, guide §2.2): partitions derive from the
-    // largest staged batch file under `srcDir` — clamp(ceil(bytes /
-    // 64 MB), 4, session value) via Streams.streamShufflePartitions —
-    // instead of the r14 constant 4, which was right for sf0.1
-    // micro-batches but a scale-killer at production volumes (every
-    // foreachBatch reduce stage bottlenecked on 4 tasks). At gate scale
-    // the clamp floor reproduces 4 exactly; -Dgraft.stream.parts=N
-    // still overrides for A/B measurement.
-    s.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.Streams.streamShufflePartitions(s, srcDir).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   /** Highest vN generation under a batchId-keyed state root — the
     * publish-time read after a retry-idempotent state chain (a
@@ -53,57 +23,6 @@ object Streaming {
   private def latestGen(root: String): Int =
     Option(new java.io.File(root).listFiles()).toSeq.flatten
       .map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toInt).max
-
-  /** The file-stream source consumes whole files, so each staged ingest
-    * batch must land as ONE parquet file in the watched dir.
-    */
-  private def writeSingle(df: org.apache.spark.sql.DataFrame,
-      srcDir: String, name: String): Unit = {
-    val tmp = s"$srcDir/_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(srcDir, s"$name.parquet"))
-    rmTree(new java.io.File(tmp))
-  }
-
-  /** Single-pass ingest staging (optimization guide §2.4 — remove
-    * redundant passes): the old `(0 until n).foreach(writeSingle(
-    * df.filter(batchExpr === b)))` loop rescanned the WHOLE source once
-    * per batch (n jobs, each collapsed to one task by its coalesce(1)).
-    * This lands the SAME n single-file batches in ONE pass: partition
-    * the rows by the batch key on write (one writer task — no less
-    * parallel than the old per-batch coalesce(1)) and move each
-    * partition's file to its `batch_<b>.parquet` name. Batch CONTENTS
-    * are row-for-row identical to the old loop (same predicate value →
-    * same batch); file mtimes are stamped ascending in b so the
-    * file-stream source (which orders by modification time) replays
-    * the batches in the same sequence as before. A batch key absent
-    * from the data (possible at the smallest SFs) still lands a
-    * schema-only parquet file, exactly like the old empty-filter write.
-    */
-  private def writeSplitSingle(df: org.apache.spark.sql.DataFrame,
-      batchExpr: org.apache.spark.sql.Column, n: Int,
-      srcDir: String, lo: Int = 0): Unit = {
-    val tmp = s"$srcDir/_split"
-    df.withColumn("bsplit", batchExpr.cast("long")).coalesce(1)
-      .write.mode("overwrite").partitionBy("bsplit").parquet(tmp)
-    val t0 = System.currentTimeMillis()
-    (lo until lo + n).foreach { b =>
-      val dst = java.nio.file.Paths.get(srcDir, s"batch_$b.parquet")
-      Option(new java.io.File(tmp, s"bsplit=$b").listFiles()).toSeq
-        .flatten.find(_.getName.endsWith(".parquet")) match {
-        case Some(part) => java.nio.file.Files.move(part.toPath, dst)
-        case None =>
-          writeSingle(df.filter(batchExpr.cast("long") === b).limit(0),
-            srcDir, s"batch_$b")
-      }
-      dst.toFile.setLastModified(t0 + b * 1000L)
-      ()
-    }
-    rmTree(new java.io.File(tmp))
-  }
 
   val all: Seq[QueryDef] = Seq(
 
@@ -264,13 +183,8 @@ object Streaming {
         |FROM all_rows GROUP BY 1""".stripMargin) { (s, dir) =>
       import graft.pipeline.DedupIndex
       val d = graft.Tables.load(s, dir, "documents").select("doc_id", "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s09_stream_src"
-      val idxDir = s"$base/s09_index"
-      DedupIndex.drop(s, srcDir)
-      DedupIndex.drop(s, idxDir)
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, idxDir) = Streams.scratchDirs(
+        "s09_stream_src", "s09_index")
       writeSingle(d.filter(col("doc_id") < 250)
         .unionAll(d.filter(col("doc_id") < 50 && col("doc_id") % 10 === 0)
           .select((col("doc_id") + 2000000).as("doc_id"), col("text"))),
@@ -280,23 +194,12 @@ object Streaming {
             col("doc_id") % 10 === 0)
           .select((col("doc_id") + 1000000).as("doc_id"), col("text"))),
         srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          DedupIndex.append(batch.sparkSession, idxDir, batch,
-            "doc_id", "text")
-          nBatches.incrementAndGet()
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        DedupIndex.append(batch.sparkSession, idxDir, batch,
+          "doc_id", "text")
+        nBatches.incrementAndGet()
+      }
       DedupIndex.read(s, idxDir)
         .select(col("h"), col("keep_id"),
           lit(nBatches.get() >= 2).as("multi_batch"))
@@ -317,36 +220,20 @@ object Streaming {
          |FROM (${Pipeline.minhashPairsSql}) q""".stripMargin) { (s, dir) =>
       import graft.pipeline.Dedup
       val d = graft.Tables.load(s, dir, "documents").select("doc_id", "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s10_stream_src"
-      val sigDir = s"$base/s10_sigs"
-      rmTree(new java.io.File(srcDir))
-      rmTree(new java.io.File(sigDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, sigDir) = Streams.scratchDirs(
+        "s10_stream_src", "s10_sigs")
       writeSingle(d.filter(col("doc_id") < 250), srcDir, "batch_a")
       writeSingle(d.filter(col("doc_id") >= 250)
         .unionAll(d.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 1000000).as("doc_id"),
             concat(col("text"), lit(" appended")).as("text"))),
         srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Dedup.minhashSigs(batch, "doc_id", "text", k = 64, shingleN = 3)
-            .write.mode("append").parquet(sigDir)
-          nBatches.incrementAndGet()
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Dedup.minhashSigs(batch, "doc_id", "text", k = 64, shingleN = 3)
+          .write.mode("append").parquet(sigDir)
+        nBatches.incrementAndGet()
+      }
       val sigs = s.read.parquet(sigDir)
       Dedup.lshCollapsedPairs(sigs, "sh", bands = 16, r = 4,
         threshold = 0.5)
@@ -367,19 +254,11 @@ object Streaming {
         .select("vec_id", "embedding")
       val cents = Clustering.kmeansCentroids(e, k = 10, iters = 2,
         "vec_id", "embedding")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s11_stream_src"
-      rmTree(new java.io.File(srcDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir) = Streams.scratchDirs("s11_stream_src")
       writeSingle(e.filter(col("vec_id") < 250), srcDir, "batch_a")
       writeSingle(e.filter(col("vec_id") >= 250), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-      Streams.runToMemory(s, Clustering.assignWith(stream, cents),
+      Streams.runToMemory(s,
+        Clustering.assignWith(Streams.fileStream(s, srcDir), cents),
         "s11_route", outputMode = "append", srcPath = srcDir)
     },
 
@@ -398,19 +277,11 @@ object Streaming {
         .select((col("doc_id") + 3000000L).as("doc_id"),
           concat(col("text"), lit("\n"), col("text")).as("text"),
           col("lang"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s12_stream_src"
-      rmTree(new java.io.File(srcDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir) = Streams.scratchDirs("s12_stream_src")
       writeSingle(docs, srcDir, "batch_a")
       writeSingle(planted, srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-      Streams.runToMemory(s, TextAnalysis.qualityCascade(stream),
+      Streams.runToMemory(s,
+        TextAnalysis.qualityCascade(Streams.fileStream(s, srcDir)),
         "s12_quality_gate", outputMode = "append", srcPath = srcDir)
     },
 
@@ -428,29 +299,14 @@ object Streaming {
         .select("doc_id", "text")
       val bench = docs.filter(col("doc_id") % 50 === 7)
       val train = docs.filter(col("doc_id") % 50 =!= 7)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s15_stream_src"
-      val outDir = s"$base/s15_scrubbed"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir) = Streams.scratchDirs(
+        "s15_stream_src", "s15_scrubbed")
       writeSingle(train.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(train.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Dedup.benchmarkSpanRemoval(batch, bench)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Dedup.benchmarkSpanRemoval(batch, bench)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
     },
 
@@ -476,13 +332,8 @@ object Streaming {
         .select(col("doc_id").as("qid"),
           concat_ws(" ", slice(graft.pipeline.TextAnalysis.tokens(
             lower(col("text"))), 1, 30)).as("qtext"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s16_stream_src"
-      val outDir = s"$base/s16_routed"
-      val statsDir = s"$base/s16_stats"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir, statsDir) = Streams.scratchDirs(
+        "s16_stream_src", "s16_routed", "s16_stats")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
       // the one-off stats job: ONE corpus postings pass materializes the
@@ -493,22 +344,11 @@ object Streaming {
         .write.mode("overwrite").parquet(statsDir)
       val stats = Retrieval.bm25StatsFromTerms(
         s.read.parquet(statsDir), docs.count())
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Retrieval.bm25ScoresAgainst(batch, queries, stats)
-            .filter(col("score") >= 4.0)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Retrieval.bm25ScoresAgainst(batch, queries, stats)
+          .filter(col("score") >= 4.0)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
     },
 
@@ -531,32 +371,18 @@ object Streaming {
         |FROM events""".stripMargin) { (s, dir) =>
       val events = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s17_stream_src"
-      val maniDir = s"$base/s17_manifest"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(maniDir))
+      val Seq(srcDir, maniDir) = Streams.scratchDirs(
+        "s17_stream_src", "s17_manifest")
       events.repartitionByRange(8, col("event_id"))
         .sortWithinPartitions("event_id")
         .write.mode("overwrite").parquet(srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.groupBy(input_file_name().as("file"))
-            .agg(min("event_id").as("min_id"),
-              max("event_id").as("max_id"),
-              count(lit(1)).as("rows"))
-            .write.mode("append").parquet(maniDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir, filesPerTrigger = 2) { (batch, _) =>
+        batch.groupBy(input_file_name().as("file"))
+          .agg(min("event_id").as("min_id"),
+            max("event_id").as("max_id"),
+            count(lit(1)).as("rows"))
+          .write.mode("append").parquet(maniDir)
+      }
       val nStaged = new java.io.File(srcDir).listFiles()
         .count(_.getName.endsWith(".parquet"))
       val m = s.read.parquet(maniDir)
@@ -598,31 +424,16 @@ object Streaming {
       val queries = corpus.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val cents = Similarity.ivfCentroids(corpus, 16, "vec_id", "embedding")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s18_stream_src"
-      val layoutDir = s"$base/s18_ivf_layout"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(layoutDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, layoutDir) = Streams.scratchDirs(
+        "s18_stream_src", "s18_ivf_layout")
       writeSingle(corpus.filter(col("vec_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(corpus.filter(col("vec_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.withColumn("cell",
-              Similarity.ivfProbeCells(cents, col("embedding"), 1)
-                .getItem(0).getField("cid"))
-            .write.partitionBy("cell").mode("append").parquet(layoutDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        batch.withColumn("cell",
+            Similarity.ivfProbeCells(cents, col("embedding"), 1)
+              .getItem(0).getField("cid"))
+          .write.partitionBy("cell").mode("append").parquet(layoutDir)
+      }
       val stored = s.read.parquet(layoutDir)
       val qc = queries.withColumn("cell_l",
           explode(Similarity.ivfProbeCells(cents, col("qvec"), 4)
@@ -676,55 +487,30 @@ object Streaming {
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s19_stream_src"
-      val vocabDir = s"$base/s19_vocab"
-      val statsDir = s"$base/s19_stats"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(vocabDir))
-      rmTree(new java.io.File(statsDir))
-      new java.io.File(srcDir).mkdirs()
-      val t0 = System.currentTimeMillis() - 3600000L
+      val Seq(srcDir, vocabDir, statsDir) = Streams.scratchDirs(
+        "s19_stream_src", "s19_vocab", "s19_stats")
       writeSplitSingle(docs,
         expr(s"CAST(doc_id AS BIGINT) * 4 div ${maxId + 1}"), 4, srcDir)
-      // pin processing order: file source sorts by (mtime, path)
-      (0 until 4).foreach { b =>
-        new java.io.File(srcDir, s"batch_$b.parquet")
-          .setLastModified(t0 + b * 60000L)
-        ()
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val sp = batch.sparkSession
+        val types = batch.select(explode(
+          TextAnalysis.tokens(lower(col("text")))).as("token"))
+        val known =
+          if (new java.io.File(vocabDir).exists())
+            sp.read.parquet(vocabDir)
+          else sp.emptyDataFrame.withColumn("token",
+            lit(null).cast("string")).select("token")
+        val fresh = types.distinct()
+          .join(known, Seq("token"), "left_anti")
+        val nDocs = batch.count()
+        val nToks = types.count()
+        val nNew = fresh.count()
+        fresh.write.mode("append").parquet(vocabDir)
+        import sp.implicits._
+        Seq((batchId, nDocs, nToks, nNew))
+          .toDF("batch", "n_docs", "n_tokens", "n_new_types")
+          .coalesce(1).write.mode("append").parquet(statsDir)
       }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val sp = batch.sparkSession
-            val types = batch.select(explode(
-              TextAnalysis.tokens(lower(col("text")))).as("token"))
-            val known =
-              if (new java.io.File(vocabDir).exists())
-                sp.read.parquet(vocabDir)
-              else sp.emptyDataFrame.withColumn("token",
-                lit(null).cast("string")).select("token")
-            val fresh = types.distinct()
-              .join(known, Seq("token"), "left_anti")
-            val nDocs = batch.count()
-            val nToks = types.count()
-            val nNew = fresh.count()
-            fresh.write.mode("append").parquet(vocabDir)
-            import sp.implicits._
-            Seq((batchId, nDocs, nToks, nNew))
-              .toDF("batch", "n_docs", "n_tokens", "n_new_types")
-              .coalesce(1).write.mode("append").parquet(statsDir)
-            ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
       s.read.parquet(statsDir)
         .select(col("batch").cast("long").as("batch"),
           col("n_docs").cast("long").as("n_docs"),
@@ -809,29 +595,14 @@ object Streaming {
         .select("doc_id", "text")
       val stats = TextAnalysis.backoffStatsMaterialized(
         docs.filter(col("doc_id") % 2 === 0))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s20_stream_src"
-      val outDir = s"$base/s20_scored"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir) = Streams.scratchDirs(
+        "s20_stream_src", "s20_scored")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.stupidBackoffScoreWith(batch, stats)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        TextAnalysis.stupidBackoffScoreWith(batch, stats)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
     },
 
@@ -852,45 +623,23 @@ object Streaming {
         val docs = graft.operators.Pipeline.urlPlanted(
           graft.Tables.load(s, dir, "documents").select("doc_id", "text"))
         val maxId = docs.agg(max("doc_id")).head().getLong(0)
-        val base = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-        val srcDir = s"$base/s21_stream_src"
-        val storeBase = s"$base/s21_url_store"
-        rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(storeBase))
-        new java.io.File(srcDir).mkdirs()
-        val t0 = System.currentTimeMillis() - 3600000L
+        val Seq(srcDir, storeBase) = Streams.scratchDirs(
+          "s21_stream_src", "s21_url_store")
         writeSplitSingle(docs,
           expr(s"CAST(doc_id AS BIGINT) * 4 div ${maxId + 1}"), 4, srcDir)
-        (0 until 4).foreach { b =>
-          new java.io.File(srcDir, s"batch_$b.parquet")
-            .setLastModified(t0 + b * 60000L)
-          ()
+        Streams.replay(s, srcDir) { (batch, batchId) =>
+          val sp = batch.sparkSession
+          val agg = Corpus.canonicalUrls(batch)
+          val prev = new java.io.File(s"$storeBase/v${batchId - 1}")
+          val merged =
+            if (!prev.exists()) agg
+            else sp.read.parquet(prev.toString).unionAll(agg)
+              .groupBy("canonical_url")
+              .agg(sum("n_occurrences").as("n_occurrences"),
+                sum("n_docs").as("n_docs"))
+          merged.coalesce(1).write.mode("overwrite")
+            .parquet(s"$storeBase/v$batchId")
         }
-        val schema = s.read.parquet(srcDir).schema
-        withStreamShuffle(s, srcDir) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              val sp = batch.sparkSession
-              val agg = Corpus.canonicalUrls(batch)
-              val prev = new java.io.File(s"$storeBase/v${batchId - 1}")
-              val merged =
-                if (!prev.exists()) agg
-                else sp.read.parquet(prev.toString).unionAll(agg)
-                  .groupBy("canonical_url")
-                  .agg(sum("n_occurrences").as("n_occurrences"),
-                    sum("n_docs").as("n_docs"))
-              merged.coalesce(1).write.mode("overwrite")
-                .parquet(s"$storeBase/v$batchId")
-              ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination() }
         s.read.parquet(s"$storeBase/v3")
           .select(col("canonical_url"),
             col("n_occurrences").cast("long").as("n_occurrences"),
@@ -912,39 +661,17 @@ object Streaming {
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "lang", "source")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s22_stream_src"
-      val storeDir = s"$base/s22_sketch_store"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(storeDir))
-      new java.io.File(srcDir).mkdirs()
-      val t0 = System.currentTimeMillis() - 3600000L
+      val Seq(srcDir, storeDir) = Streams.scratchDirs(
+        "s22_stream_src", "s22_sketch_store")
       writeSplitSingle(docs,
         expr(s"CAST(doc_id AS BIGINT) * 4 div ${maxId + 1}"), 4, srcDir)
-      (0 until 4).foreach { b =>
-        new java.io.File(srcDir, s"batch_$b.parquet")
-          .setLastModified(t0 + b * 60000L)
-        ()
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val rows = profCols.map { c =>
+          batch.agg(hll_sketch_agg(col(c), lit(14)).as("sk"))
+            .select(lit(c).as("col_name"), col("sk"))
+        }.reduce(_.unionAll(_))
+        rows.coalesce(1).write.mode("append").parquet(storeDir)
       }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val rows = profCols.map { c =>
-              batch.agg(hll_sketch_agg(col(c), lit(14)).as("sk"))
-                .select(lit(c).as("col_name"), col("sk"))
-            }.reduce(_.unionAll(_))
-            rows.coalesce(1).write.mode("append").parquet(storeDir)
-            ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
       val merged = s.read.parquet(storeDir).groupBy("col_name")
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(false)))
           .as("est_merged"))
@@ -998,40 +725,24 @@ object Streaming {
       val delta = Corpus.snapshotDiff(v1, v2)
         .filter(col("status") =!= "unchanged")
         .join(v2, Seq("doc_id"), "left")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s13_stream_src"
-      val storeRoot = s"$base/s13_store"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(storeRoot))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, storeRoot) = Streams.scratchDirs(
+        "s13_stream_src", "s13_store")
       writeSingle(delta.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(delta.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
       v1.write.mode("overwrite").parquet(s"$storeRoot/v0")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        // retry-idempotent: generations keyed by the framework batchId
-        // (the s39 discipline) — a retried micro-batch rewrites its
-        // own generation instead of double-advancing a counter
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val cur = s.read.parquet(s"$storeRoot/v$batchId")
-          val next = cur
-            .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-            .unionByName(batch
-              .filter(col("status").isin("added", "changed"))
-              .select("doc_id", "text"))
-          next.write.mode("overwrite")
-            .parquet(s"$storeRoot/v${batchId + 1}")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      // retry-idempotent: generations keyed by the framework batchId
+      // (the s39 discipline) — a retried micro-batch rewrites its
+      // own generation instead of double-advancing a counter
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val cur = s.read.parquet(s"$storeRoot/v$batchId")
+        val next = cur
+          .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+          .unionByName(batch
+            .filter(col("status").isin("added", "changed"))
+            .select("doc_id", "text"))
+        next.write.mode("overwrite")
+          .parquet(s"$storeRoot/v${batchId + 1}")
+      }
       s.read.parquet(s"$storeRoot/v${latestGen(storeRoot)}")
         .select(col("doc_id"), md5(col("text")).as("dg"))
         .orderBy("doc_id")
@@ -1070,32 +781,17 @@ object Streaming {
       import graft.pipeline.Corpus
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s14_stream_src"
-      val outDir = s"$base/s14_psi_out"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir) = Streams.scratchDirs(
+        "s14_stream_src", "s14_psi_out")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val grp = batch.agg(min(col("doc_id") % 2)).head().getLong(0)
-          Corpus.snapshotDrift(docs, batch)
-            .agg(round(sum("psi_term"), 6).as("psi"))
-            .select(lit(grp).as("grp"), col("psi"))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        val grp = batch.agg(min(col("doc_id") % 2)).head().getLong(0)
+        Corpus.snapshotDrift(docs, batch)
+          .agg(round(sum("psi_term"), 6).as("psi"))
+          .select(lit(grp).as("grp"), col("psi"))
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).orderBy("grp")
     },
 
@@ -1179,19 +875,20 @@ object Streaming {
         rmTree(new java.io.File(tmp))
       }
       def runOnce(): Unit = {
-        withStreamShuffle(s, src) {
-        val q = s.readStream.format("graft-logfmt").load(src)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,3)")).cast("double")
-              .as("sum_value"))
-          .writeStream
-          .format("memory").queryName("s24_counts")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination() }
+        Streams.withStreamShuffle(s, src) {
+          s.readStream.format("graft-logfmt").load(src)
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              sum(col("value").cast("decimal(18,3)")).cast("double")
+                .as("sum_value"))
+            .writeStream
+            .format("memory").queryName("s24_counts")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+            .awaitTermination()
+        }
       }
       stage("batch-000.logfmt", 0)
       runOnce()
@@ -1212,31 +909,15 @@ object Streaming {
         .select("vec_id", "embedding")
       val evalSet = e.filter(col("vec_id") % 50 === 3)
         .select(col("vec_id").as("eval_id"), col("embedding").as("evec"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s25_stream_src"
-      val outDir = s"$base/s25_stream_out"
-      rmTree(new java.io.File(srcDir))
-      rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir) = Streams.scratchDirs(
+        "s25_stream_src", "s25_stream_out")
       writeSingle(e.filter(col("vec_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(e.filter(col("vec_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            _: Long) =>
-          Similarity.semanticContamination(batch, evalSet,
-            threshold = 0.98)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Similarity.semanticContamination(batch, evalSet,
+          threshold = 0.98)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
     },
 
@@ -1248,42 +929,26 @@ object Streaming {
     QueryDef("s26_stream_write_audit_publish",
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
         |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s26_stream_src"
-      val pubDir = s"$base/s26_published"
-      rmTree(new java.io.File(srcDir))
-      rmTree(new java.io.File(pubDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, pubDir) = Streams.scratchDirs(
+        "s26_stream_src", "s26_published")
       new java.io.File(pubDir).mkdirs()
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "event_type")
       writeSingle(ev.filter(col("event_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(ev.filter(col("event_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
       val fs = new org.apache.hadoop.fs.Path(pubDir)
         .getFileSystem(s.sessionState.newHadoopConf())
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val n = batch.count()
-          val staging = new org.apache.hadoop.fs.Path(
-            s"$pubDir/_staging_gen$batchId")
-          batch.write.mode("overwrite").parquet(staging.toString)
-          val staged = s.read.parquet(staging.toString)
-          if (staged.count() == n)
-            fs.rename(staging,
-              new org.apache.hadoop.fs.Path(s"$pubDir/gen$batchId"))
-          else fs.delete(staging, true)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val n = batch.count()
+        val staging = new org.apache.hadoop.fs.Path(
+          s"$pubDir/_staging_gen$batchId")
+        batch.write.mode("overwrite").parquet(staging.toString)
+        val staged = s.read.parquet(staging.toString)
+        if (staged.count() == n)
+          fs.rename(staging,
+            new org.apache.hadoop.fs.Path(s"$pubDir/gen$batchId"))
+        else fs.delete(staging, true)
+      }
       s.read.parquet(s"$pubDir/gen*")
         .groupBy("event_type").agg(count(lit(1)).as("n"))
     },
@@ -1295,32 +960,16 @@ object Streaming {
     QueryDef("s27_stream_chunk_index", Pipeline.sentenceChunksSql) {
       (s, dir) =>
       import graft.pipeline.Corpus
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s27_stream_src"
-      val outDir = s"$base/s27_stream_out"
-      rmTree(new java.io.File(srcDir))
-      rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir) = Streams.scratchDirs(
+        "s27_stream_src", "s27_stream_out")
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            _: Long) =>
-          Corpus.sentenceChunks(batch, maxTokens = 64)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Corpus.sentenceChunks(batch, maxTokens = 64)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
     },
 
@@ -1357,32 +1006,17 @@ object Streaming {
           col("purchase_value"))
       val clicks = ev.filter(col("event_type") === "click")
         .select("user_id", "event_id", "ts")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s28_stream_src"
-      val outDir = s"$base/s28_enriched"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(outDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, outDir) = Streams.scratchDirs(
+        "s28_stream_src", "s28_enriched")
       writeSingle(clicks.filter(col("event_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(clicks.filter(col("event_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          AsOfJoinOps.asofJoin(batch, dim,
-            "user_id", "ts", "r_uid", "purchase_ts")
-            .select("user_id", "event_id", "ts", "purchase_ts",
-              "purchase_value")
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        AsOfJoinOps.asofJoin(batch, dim,
+          "user_id", "ts", "r_uid", "purchase_ts")
+          .select("user_id", "event_id", "ts", "purchase_ts",
+            "purchase_value")
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
     },
 
@@ -1408,29 +1042,14 @@ object Streaming {
       val queries = corpus.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val cbs = Similarity.pqCodebooks(corpus, 8, 16, "vec_id", "embedding")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s29_stream_src"
-      val idxDir = s"$base/s29_pq_codes"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(idxDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, idxDir) = Streams.scratchDirs(
+        "s29_stream_src", "s29_pq_codes")
       writeSingle(corpus.filter(col("vec_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(corpus.filter(col("vec_id") % 2 === 1), srcDir, "batch_b")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Similarity.pqEncodeTable(batch, cbs, "vec_id", "embedding")
-            .write.mode("append").parquet(idxDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Similarity.pqEncodeTable(batch, cbs, "vec_id", "embedding")
+          .write.mode("append").parquet(idxDir)
+      }
       val streamTop = Similarity.pqTopKFromCodes(
         s.read.parquet(idxDir), corpus, queries, cbs,
         k = 10, shortlistFactor = 10,
@@ -1472,30 +1091,15 @@ object Streaming {
       import graft.pipeline.Corpus
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "n_chars")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s30_stream_src"
-      val resDir = s"$base/s30_reservoir"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(resDir))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, resDir) = Streams.scratchDirs(
+        "s30_stream_src", "s30_reservoir")
       writeSingle(docs.filter(col("doc_id") % 3 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 3 === 1), srcDir, "batch_b")
       writeSingle(docs.filter(col("doc_id") % 3 === 2), srcDir, "batch_c")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Corpus.weightedSampleK(batch, k = 500, weightCol = "n_chars")
-            .write.mode("append").parquet(resDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        Corpus.weightedSampleK(batch, k = 500, weightCol = "n_chars")
+          .write.mode("append").parquet(resDir)
+      }
       s.read.parquet(resDir)
         .orderBy(col("key").desc, col("doc_id"))
         .limit(500)
@@ -1530,42 +1134,26 @@ object Streaming {
         |) ORDER BY check_name""".stripMargin) { (s, dir) =>
       val orders = graft.Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s31_stream_src"
-      val statsDir = s"$base/s31_stats"
-      val keysDir = s"$base/s31_keys"
-      Seq(srcDir, statsDir, keysDir).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, statsDir, keysDir) = Streams.scratchDirs(
+        "s31_stream_src", "s31_stats", "s31_keys")
       writeSplitSingle(orders, col("o_orderkey") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.agg(
-            count(lit(1)).cast("long").as("checked"),
-            coalesce(sum(when(!col("o_orderstatus").isin("O", "F", "P"),
-              1L).otherwise(0L)), lit(0L)).cast("long").as("v_status"),
-            coalesce(sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L)),
-              lit(0L)).cast("long").as("v_price"))
-            .select(expr("stack(2, " +
-              "'orders_status_domain', checked, v_status, " +
-              "'orders_price_positive', checked, v_price) " +
-              "AS (check_name, checked, violations)"))
-            .coalesce(1).write.mode("append").parquet(statsDir)
-          batch.groupBy("o_orderkey")
-            .agg(count(lit(1)).cast("long").as("cnt"))
-            .coalesce(1).write.mode("append").parquet(keysDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        batch.agg(
+          count(lit(1)).cast("long").as("checked"),
+          coalesce(sum(when(!col("o_orderstatus").isin("O", "F", "P"),
+            1L).otherwise(0L)), lit(0L)).cast("long").as("v_status"),
+          coalesce(sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L)),
+            lit(0L)).cast("long").as("v_price"))
+          .select(expr("stack(2, " +
+            "'orders_status_domain', checked, v_status, " +
+            "'orders_price_positive', checked, v_price) " +
+            "AS (check_name, checked, violations)"))
+          .coalesce(1).write.mode("append").parquet(statsDir)
+        batch.groupBy("o_orderkey")
+          .agg(count(lit(1)).cast("long").as("cnt"))
+          .coalesce(1).write.mode("append").parquet(keysDir)
+      }
       val decomposable = s.read.parquet(statsDir)
         .groupBy("check_name")
         .agg(sum(col("checked")).cast("long").as("checked"),
@@ -1637,30 +1225,15 @@ object Streaming {
         .select(col("event_type").as("series"),
           expr("unix_micros(ts) div 3600000000").as("hr"),
           col("event_id"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s33_stream_src"
-      val cntDir = s"$base/s33_counts"
-      Seq(srcDir, cntDir).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, cntDir) = Streams.scratchDirs(
+        "s33_stream_src", "s33_counts")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.groupBy("series", "hr")
-            .agg(count(lit(1)).cast("long").as("n"))
-            .coalesce(1).write.mode("append").parquet(cntDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        batch.groupBy("series", "hr")
+          .agg(count(lit(1)).cast("long").as("n"))
+          .coalesce(1).write.mode("append").parquet(cntDir)
+      }
       val merged = s.read.parquet(cntDir).groupBy("series", "hr")
         .agg(sum("n").cast("long").as("n0"))
       val bounds = merged.agg(min("hr").as("mn"), max("hr").as("mx"))
@@ -1737,22 +1310,14 @@ object Streaming {
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s32_stream_src"
-      val stateRoot = s"$base/s32_state"
-      rmTree(new java.io.File(srcDir)); rmTree(new java.io.File(stateRoot))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+        "s32_stream_src", "s32_state")
       // time-ordered staging WITHOUT a global sort: range-split on
       // approx time quartiles (same-us ties across a cut are safe —
       // strict '>' excludes same-instant events on either side)
       val cuts = ev.stat.approxQuantile("us",
         Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
       val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
-      // FileStreamSource orders by mtime; back-to-back writes can tie
-      // at ms granularity and fall back to listing order — pin the
-      // event-time processing order with explicit increasing mtimes
-      val t0 = System.currentTimeMillis() - 3600000L
       // batch index 1 + #cuts-below == the old (bounds(b-1), bounds(b)]
       // range filter, computed in ONE pass (bounds(0)/bounds(4) are the
       // +/-inf sentinels every row clears)
@@ -1761,54 +1326,37 @@ object Streaming {
           (col("us") > bounds(2)).cast("int") +
           (col("us") > bounds(3)).cast("int"),
         4, srcDir, lo = 1)
-      (1 to 4).foreach { b =>
-        new java.io.File(srcDir, s"batch_$b.parquet")
-          .setLastModified(t0 + b * 60000L)
-        ()
-      }
       val nullA = lit(null).cast("long")
       s.range(0).select(col("id").as("user_id"), nullA.as("a1"),
         nullA.as("a2"), nullA.as("a3"))
         .write.mode("overwrite").parquet(s"$stateRoot/v0")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        // retry-idempotent: batchId-keyed generations (s39 discipline)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val st = s.read.parquet(s"$stateRoot/v$batchId")
-          def stepMin(tp: String, anchored: org.apache.spark.sql.DataFrame,
-              anchorCol: String): org.apache.spark.sql.DataFrame =
-            batch.filter(col("event_type") === tp)
-              .select(col("user_id"), col("us"))
-              .join(anchored.select(col("user_id"), col(anchorCol)),
-                "user_id")
-              .filter(col("us") > col(anchorCol))
-              .groupBy("user_id").agg(min("us").as("nv"))
-          val bv = batch.filter(col("event_type") === "view")
+      // retry-idempotent: batchId-keyed generations (s39 discipline)
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val st = s.read.parquet(s"$stateRoot/v$batchId")
+        def stepMin(tp: String, anchored: org.apache.spark.sql.DataFrame,
+            anchorCol: String): org.apache.spark.sql.DataFrame =
+          batch.filter(col("event_type") === tp)
+            .select(col("user_id"), col("us"))
+            .join(anchored.select(col("user_id"), col(anchorCol)),
+              "user_id")
+            .filter(col("us") > col(anchorCol))
             .groupBy("user_id").agg(min("us").as("nv"))
-          val st1 = st.join(bv, Seq("user_id"), "full_outer")
-            .select(col("user_id"), least(col("a1"), col("nv")).as("a1"),
-              col("a2"), col("a3"))
-          val st2 = st1.join(stepMin("click", st1, "a1"),
-              Seq("user_id"), "left")
-            .select(col("user_id"), col("a1"),
-              least(col("a2"), col("nv")).as("a2"), col("a3"))
-          val st3 = st2.join(stepMin("purchase", st2, "a2"),
-              Seq("user_id"), "left")
-            .select(col("user_id"), col("a1"), col("a2"),
-              least(col("a3"), col("nv")).as("a3"))
-          st3.write.mode("overwrite")
-            .parquet(s"$stateRoot/v${batchId + 1}")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+        val bv = batch.filter(col("event_type") === "view")
+          .groupBy("user_id").agg(min("us").as("nv"))
+        val st1 = st.join(bv, Seq("user_id"), "full_outer")
+          .select(col("user_id"), least(col("a1"), col("nv")).as("a1"),
+            col("a2"), col("a3"))
+        val st2 = st1.join(stepMin("click", st1, "a1"),
+            Seq("user_id"), "left")
+          .select(col("user_id"), col("a1"),
+            least(col("a2"), col("nv")).as("a2"), col("a3"))
+        val st3 = st2.join(stepMin("purchase", st2, "a2"),
+            Seq("user_id"), "left")
+          .select(col("user_id"), col("a1"), col("a2"),
+            least(col("a3"), col("nv")).as("a3"))
+        st3.write.mode("overwrite")
+          .parquet(s"$stateRoot/v${batchId + 1}")
+      }
       graft.operators.Pipeline.funnelRates(
         s.read.parquet(s"$stateRoot/v${latestGen(stateRoot)}").agg(
           count(col("a1")).cast("long").as("n1"),
@@ -1851,35 +1399,20 @@ object Streaming {
         .select(col("event_type"), col("event_id"),
           col("value").as("v"), unix_micros(col("ts")).as("us"))
         .withColumn("hr", expr("us div 3600000000"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s34_stream_src"
-      val barDir = s"$base/s34_bars"
-      Seq(srcDir, barDir).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, barDir) = Streams.scratchDirs(
+        "s34_stream_src", "s34_bars")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.groupBy("event_type", "hr")
-            .agg(min(struct(col("us"), col("event_id"), col("v")))
-                .as("o"),
-              max(col("v")).as("hi"), min(col("v")).as("lo"),
-              max(struct(col("us"), col("event_id"), col("v")))
-                .as("c"),
-              count(lit(1)).cast("long").as("n"))
-            .coalesce(1).write.mode("append").parquet(barDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        batch.groupBy("event_type", "hr")
+          .agg(min(struct(col("us"), col("event_id"), col("v")))
+              .as("o"),
+            max(col("v")).as("hi"), min(col("v")).as("lo"),
+            max(struct(col("us"), col("event_id"), col("v")))
+              .as("c"),
+            count(lit(1)).cast("long").as("n"))
+          .coalesce(1).write.mode("append").parquet(barDir)
+      }
       s.read.parquet(barDir).groupBy("event_type", "hr")
         .agg(min(col("o")).getField("v").as("open"),
           max(col("hi")).as("high"), min(col("lo")).as("low"),
@@ -1921,22 +1454,14 @@ object Streaming {
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"),
           unix_micros(col("ts")).as("us"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s35_stream_src"
-      val cntDir = s"$base/s35_counts"
-      val stateRoot = s"$base/s35_state"
-      Seq(srcDir, cntDir, stateRoot)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, cntDir, stateRoot) = Streams.scratchDirs(
+        "s35_stream_src", "s35_counts", "s35_state")
       val cuts = ev.stat.approxQuantile("us",
         Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
       val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
-      // explicit increasing mtimes: the carried last-event state is
-      // only correct if batches process in event-time order, and
-      // FileStreamSource's mtime ordering ties at ms granularity for
-      // back-to-back writes (ADVICE r9)
-      val t0 = System.currentTimeMillis() - 3600000L
+      // the carried last-event state is only correct if batches
+      // process in event-time order: writeSplitSingle's ascending
+      // mtimes replay them in batch-index order
       // batch index 1 + #cuts-below == the old (bounds(b-1), bounds(b)]
       // range filter, computed in ONE pass (bounds(0)/bounds(4) are the
       // +/-inf sentinels every row clears)
@@ -1945,54 +1470,37 @@ object Streaming {
           (col("us") > bounds(2)).cast("int") +
           (col("us") > bounds(3)).cast("int"),
         4, srcDir, lo = 1)
-      (1 to 4).foreach { b =>
-        new java.io.File(srcDir, s"batch_$b.parquet")
-          .setLastModified(t0 + b * 60000L)
-        ()
-      }
       s.range(0).select(col("id").as("user_id"),
           lit(null).cast("long").as("us"),
           lit(null).cast("long").as("event_id"),
           lit(null).cast("string").as("event_type"))
         .write.mode("overwrite").parquet(s"$stateRoot/v0")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        // retry-idempotent: batchId-keyed generations AND per-batch
-        // overwrite paths for the transition counts (s39 discipline —
-        // an appended count row would duplicate under a retry)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val st = s.read.parquet(s"$stateRoot/v$batchId")
-            .select("user_id", "us", "event_id", "event_type")
-          val uni = st.unionByName(
-            batch.select("user_id", "us", "event_id", "event_type"))
-          val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-          uni.withColumn("tt", lead(col("event_type"), 1).over(w))
-            .withColumn("gap", lead(col("us"), 1).over(w) - col("us"))
-            .filter(col("tt").isNotNull && col("gap") < 1800000000L)
-            .groupBy(col("event_type").as("from_type"),
-              col("tt").as("to_type"))
-            .agg(count(lit(1)).cast("long").as("n"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$cntDir/b_$batchId")
-          uni.groupBy("user_id")
-            .agg(max(struct(col("us"), col("event_id"),
-              col("event_type"))).as("m"))
-            .select(col("user_id"), col("m.us").as("us"),
-              col("m.event_id").as("event_id"),
-              col("m.event_type").as("event_type"))
-            .write.mode("overwrite")
-            .parquet(s"$stateRoot/v${batchId + 1}")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      // retry-idempotent: batchId-keyed generations AND per-batch
+      // overwrite paths for the transition counts (s39 discipline —
+      // an appended count row would duplicate under a retry)
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val st = s.read.parquet(s"$stateRoot/v$batchId")
+          .select("user_id", "us", "event_id", "event_type")
+        val uni = st.unionByName(
+          batch.select("user_id", "us", "event_id", "event_type"))
+        val w = Window.partitionBy("user_id").orderBy("us", "event_id")
+        uni.withColumn("tt", lead(col("event_type"), 1).over(w))
+          .withColumn("gap", lead(col("us"), 1).over(w) - col("us"))
+          .filter(col("tt").isNotNull && col("gap") < 1800000000L)
+          .groupBy(col("event_type").as("from_type"),
+            col("tt").as("to_type"))
+          .agg(count(lit(1)).cast("long").as("n"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$cntDir/b_$batchId")
+        uni.groupBy("user_id")
+          .agg(max(struct(col("us"), col("event_id"),
+            col("event_type"))).as("m"))
+          .select(col("user_id"), col("m.us").as("us"),
+            col("m.event_id").as("event_id"),
+            col("m.event_type").as("event_type"))
+          .write.mode("overwrite")
+          .parquet(s"$stateRoot/v${batchId + 1}")
+      }
       s.read.option("recursiveFileLookup", "true").parquet(cntDir)
         .groupBy("from_type", "to_type")
         .agg(sum(col("n")).cast("long").as("n"))
@@ -2029,29 +1537,14 @@ object Streaming {
       // across 4 batches
       val reqs = ev.filter(col("user_id") % 97 === 3)
         .select(col("user_id"), col("event_id"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s36_stream_src"
-      val keyDir = s"$base/s36_tombstones"
-      Seq(srcDir, keyDir).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, keyDir) = Streams.scratchDirs(
+        "s36_stream_src", "s36_tombstones")
       writeSplitSingle(reqs, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.select("user_id").distinct()
-            .coalesce(1).write.mode("append").parquet(keyDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, _) =>
+        batch.select("user_id").distinct()
+          .coalesce(1).write.mode("append").parquet(keyDir)
+      }
       graft.pipeline.Contracts.deletionAudit(ev, "user_id",
         s.read.parquet(keyDir))
     },
@@ -2117,35 +1610,19 @@ object Streaming {
         .select(col("event_type").as("series"),
           expr("unix_micros(ts) div 3600000000").as("hr"),
           col("event_id"), col("ts"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s37_stream_src"
-      val cntDir = s"$base/s37_counts"
-      Seq(srcDir, cntDir).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, cntDir) = Streams.scratchDirs(
+        "s37_stream_src", "s37_counts")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        // retry-idempotent: per-batch OVERWRITE paths keyed by the
-        // framework batchId (s39 discipline) — an append would
-        // duplicate a retried batch's partial counts
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.groupBy("series", "hr")
-            .agg(count(lit(1)).cast("long").as("n"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$cntDir/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      // retry-idempotent: per-batch OVERWRITE paths keyed by the
+      // framework batchId (s39 discipline) — an append would
+      // duplicate a retried batch's partial counts
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.groupBy("series", "hr")
+          .agg(count(lit(1)).cast("long").as("n"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$cntDir/b_$batchId")
+      }
       // merge the accumulated partials back into per-hour events-shaped
       // rows? No — run p160's exact report pipeline over the merged
       // counts via the SHARED cusumFromCounts stage (one arithmetic
@@ -2228,35 +1705,19 @@ object Streaming {
         |FROM x""".stripMargin) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s38_stream_src"
-      val cntDir = s"$base/s38_counts"
-      Seq(srcDir, cntDir).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, cntDir) = Streams.scratchDirs(
+        "s38_stream_src", "s38_counts")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        // retry-idempotent: per-batch OVERWRITE paths keyed by the
-        // framework batchId (s39 discipline)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.groupBy("user_id")
-            .agg(sum(when(col("event_type") === "purchase", 1L)
-              .otherwise(0L)).as("nc"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$cntDir/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      // retry-idempotent: per-batch OVERWRITE paths keyed by the
+      // framework batchId (s39 discipline)
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.groupBy("user_id")
+          .agg(sum(when(col("event_type") === "purchase", 1L)
+            .otherwise(0L)).as("nc"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$cntDir/b_$batchId")
+      }
       val flags = s.read.option("recursiveFileLookup", "true")
         .parquet(cntDir).groupBy("user_id")
         .agg(when(sum(col("nc")) >= 14, 1L).otherwise(0L).as("conv"))
@@ -2392,87 +1853,63 @@ object Streaming {
       val r = ev.agg(min("wk"), max("wk")).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
       val cuts = (1 to 4).map(k => mn + ((mx - mn + 1) * k + 3) / 4 - 1)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s39_stream_src"
-      val stateRoot = s"$base/s39_state"
-      val looksDir = s"$base/s39_looks"
-      Seq(srcDir, stateRoot, looksDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
-      val lows = Long.MinValue +: cuts.init
-      val t0 = System.currentTimeMillis() - 3600000L
-      // batch index 1 + #cuts-below == the old (lows(b-1), cuts(b-1)]
-      // range filter in ONE pass; rows above cuts(3) index to 5 and are
-      // dropped, exactly as the old loop's filters dropped them
+      val Seq(srcDir, stateRoot, looksDir) = Streams.scratchDirs(
+        "s39_stream_src", "s39_state", "s39_looks")
+      // batch index 1 + #cuts-below == the old (cuts(b-2), cuts(b-1)]
+      // range filter (no lower bound for b = 1) in ONE pass; rows above
+      // cuts(3) index to 5 and are dropped, exactly as the old loop's
+      // filters dropped them
       writeSplitSingle(ev,
         lit(1) + (col("wk") > cuts(0)).cast("int") +
           (col("wk") > cuts(1)).cast("int") +
           (col("wk") > cuts(2)).cast("int") +
           (col("wk") > cuts(3)).cast("int"),
         4, srcDir, lo = 1)
-      (1 to 4).foreach { b =>
-        new java.io.File(srcDir, s"batch_$b.parquet")
-          .setLastModified(t0 + b * 60000L)
-        ()
-      }
       s.range(0).select(col("id").as("user_id"),
           lit(null).cast("long").as("fw"),
           lit(null).cast("long").as("np"))
         .write.mode("overwrite").parquet(s"$stateRoot/v0")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          // retry-idempotent (ADVICE r10): the state generation and
-          // the look row are keyed by the FRAMEWORK batchId — not an
-          // in-memory counter — and every write OVERWRITES its own
-          // per-batch path, so a Spark-retried micro-batch replaces
-          // its outputs instead of appending a duplicate look and
-          // rereading a stale generation
-          val g = batchId
-          val st = s.read.parquet(s"$stateRoot/v$g")
-            .select("user_id", "fw", "np")
-          val bagg = batch.groupBy("user_id")
-            .agg(min(col("wk")).as("fw"),
-              sum(when(col("event_type") === "purchase", 1L)
-                .otherwise(0L)).as("np"))
-          st.unionByName(bagg).groupBy("user_id")
-            .agg(min("fw").as("fw"), sum("np").cast("long").as("np"))
-            .write.mode("overwrite").parquet(s"$stateRoot/v${g + 1}")
-          val k = (g + 1).toInt
-          val m = s.read.parquet(s"$stateRoot/v${g + 1}")
-            .withColumn("va",
-              substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-          val cnt = m.agg(
-            sum(when(col("va"), 1L).otherwise(0L)).cast("long")
-              .as("n_a"),
-            sum(when(col("va") && col("np") >= 14, 1L).otherwise(0L))
-              .cast("long").as("conv_a"),
-            sum(when(!col("va"), 1L).otherwise(0L)).cast("long")
-              .as("n_b"),
-            sum(when(!col("va") && col("np") >= 14, 1L).otherwise(0L))
-              .cast("long").as("conv_b"))
-          val z = graft.operators.Pipeline.twoPropZ(col("n_a"),
-            col("conv_a"), col("n_b"), col("conv_b"))
-          cnt.select(lit(k).as("look"),
-              lit(cuts(k - 1)).as("wk_cut"),
-              col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
-              round(z, 6).as("z"),
-              lit(bnds(k - 1)).as("boundary"),
-              coalesce(abs(z) >= bnds(k - 1), lit(false)).as("crossed"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$looksDir/look_$k")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        // retry-idempotent (ADVICE r10): the state generation and
+        // the look row are keyed by the FRAMEWORK batchId — not an
+        // in-memory counter — and every write OVERWRITES its own
+        // per-batch path, so a Spark-retried micro-batch replaces
+        // its outputs instead of appending a duplicate look and
+        // rereading a stale generation
+        val g = batchId
+        val st = s.read.parquet(s"$stateRoot/v$g")
+          .select("user_id", "fw", "np")
+        val bagg = batch.groupBy("user_id")
+          .agg(min(col("wk")).as("fw"),
+            sum(when(col("event_type") === "purchase", 1L)
+              .otherwise(0L)).as("np"))
+        st.unionByName(bagg).groupBy("user_id")
+          .agg(min("fw").as("fw"), sum("np").cast("long").as("np"))
+          .write.mode("overwrite").parquet(s"$stateRoot/v${g + 1}")
+        val k = (g + 1).toInt
+        val m = s.read.parquet(s"$stateRoot/v${g + 1}")
+          .withColumn("va",
+            substring(md5(col("user_id").cast("string")), 1, 1) < "8")
+        val cnt = m.agg(
+          sum(when(col("va"), 1L).otherwise(0L)).cast("long")
+            .as("n_a"),
+          sum(when(col("va") && col("np") >= 14, 1L).otherwise(0L))
+            .cast("long").as("conv_a"),
+          sum(when(!col("va"), 1L).otherwise(0L)).cast("long")
+            .as("n_b"),
+          sum(when(!col("va") && col("np") >= 14, 1L).otherwise(0L))
+            .cast("long").as("conv_b"))
+        val z = graft.operators.Pipeline.twoPropZ(col("n_a"),
+          col("conv_a"), col("n_b"), col("conv_b"))
+        cnt.select(lit(k).as("look"),
+            lit(cuts(k - 1)).as("wk_cut"),
+            col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
+            round(z, 6).as("z"),
+            lit(bnds(k - 1)).as("boundary"),
+            coalesce(abs(z) >= bnds(k - 1), lit(false)).as("crossed"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$looksDir/look_$k")
+      }
       val wPrev = Window
         .partitionBy(graft.pipeline.Corpus.boundedKey(col("look")))
         .orderBy("look")
@@ -2564,84 +2001,60 @@ object Streaming {
       val r = ev.agg(min("wk"), max("wk")).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
       val cuts = (1 to 4).map(k => mn + ((mx - mn + 1) * k + 3) / 4 - 1)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s44_stream_src"
-      val stateRoot = s"$base/s44_state"
-      val looksDir = s"$base/s44_looks"
-      Seq(srcDir, stateRoot, looksDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
-      val lows = Long.MinValue +: cuts.init
-      val t0 = System.currentTimeMillis() - 3600000L
-      // batch index 1 + #cuts-below == the old (lows(b-1), cuts(b-1)]
-      // range filter in ONE pass; rows above cuts(3) index to 5 and are
-      // dropped, exactly as the old loop's filters dropped them
+      val Seq(srcDir, stateRoot, looksDir) = Streams.scratchDirs(
+        "s44_stream_src", "s44_state", "s44_looks")
+      // batch index 1 + #cuts-below == the old (cuts(b-2), cuts(b-1)]
+      // range filter (no lower bound for b = 1) in ONE pass; rows above
+      // cuts(3) index to 5 and are dropped, exactly as the old loop's
+      // filters dropped them
       writeSplitSingle(ev,
         lit(1) + (col("wk") > cuts(0)).cast("int") +
           (col("wk") > cuts(1)).cast("int") +
           (col("wk") > cuts(2)).cast("int") +
           (col("wk") > cuts(3)).cast("int"),
         4, srcDir, lo = 1)
-      (1 to 4).foreach { b =>
-        new java.io.File(srcDir, s"batch_$b.parquet")
-          .setLastModified(t0 + b * 60000L)
-        ()
-      }
       s.range(0).select(col("id").as("user_id"),
           lit(null).cast("long").as("fw"),
           lit(null).cast("long").as("np"))
         .write.mode("overwrite").parquet(s"$stateRoot/v0")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val g = batchId
-          val st = s.read.parquet(s"$stateRoot/v$g")
-            .select("user_id", "fw", "np")
-          val bagg = batch.groupBy("user_id")
-            .agg(min(col("wk")).as("fw"),
-              sum(when(col("event_type") === "purchase", 1L)
-                .otherwise(0L)).as("np"))
-          st.unionByName(bagg).groupBy("user_id")
-            .agg(min("fw").as("fw"), sum("np").cast("long").as("np"))
-            .write.mode("overwrite").parquet(s"$stateRoot/v${g + 1}")
-          val k = (g + 1).toInt
-          val m = s.read.parquet(s"$stateRoot/v${g + 1}")
-            .withColumn("va",
-              substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-          val cnt = m.agg(
-            sum(when(col("va"), 1L).otherwise(0L)).cast("long")
-              .as("n_a"),
-            sum(when(col("va") && col("np") >= 14, 1L).otherwise(0L))
-              .cast("long").as("conv_a"),
-            sum(when(!col("va"), 1L).otherwise(0L)).cast("long")
-              .as("n_b"),
-            sum(when(!col("va") && col("np") >= 14, 1L).otherwise(0L))
-              .cast("long").as("conv_b"))
-          val theta = when(col("n_a") > 0 && col("n_b") > 0,
-            col("conv_a").cast("double") / col("n_a").cast("double") -
-              col("conv_b").cast("double") / col("n_b").cast("double"))
-          val pNow = graft.operators.Pipeline.msprtPNow(col("n_a"),
-            col("conv_a"), col("n_b"), col("conv_b"), tauSq = 0.01)
-          cnt.select(lit(k).as("look"),
-              lit(cuts(k - 1)).as("wk_cut"),
-              col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
-              round(theta, 6).as("theta"),
-              round(pNow, 6).as("p_now"),
-              pNow.as("p_raw"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$looksDir/look_$k")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val g = batchId
+        val st = s.read.parquet(s"$stateRoot/v$g")
+          .select("user_id", "fw", "np")
+        val bagg = batch.groupBy("user_id")
+          .agg(min(col("wk")).as("fw"),
+            sum(when(col("event_type") === "purchase", 1L)
+              .otherwise(0L)).as("np"))
+        st.unionByName(bagg).groupBy("user_id")
+          .agg(min("fw").as("fw"), sum("np").cast("long").as("np"))
+          .write.mode("overwrite").parquet(s"$stateRoot/v${g + 1}")
+        val k = (g + 1).toInt
+        val m = s.read.parquet(s"$stateRoot/v${g + 1}")
+          .withColumn("va",
+            substring(md5(col("user_id").cast("string")), 1, 1) < "8")
+        val cnt = m.agg(
+          sum(when(col("va"), 1L).otherwise(0L)).cast("long")
+            .as("n_a"),
+          sum(when(col("va") && col("np") >= 14, 1L).otherwise(0L))
+            .cast("long").as("conv_a"),
+          sum(when(!col("va"), 1L).otherwise(0L)).cast("long")
+            .as("n_b"),
+          sum(when(!col("va") && col("np") >= 14, 1L).otherwise(0L))
+            .cast("long").as("conv_b"))
+        val theta = when(col("n_a") > 0 && col("n_b") > 0,
+          col("conv_a").cast("double") / col("n_a").cast("double") -
+            col("conv_b").cast("double") / col("n_b").cast("double"))
+        val pNow = graft.operators.Pipeline.msprtPNow(col("n_a"),
+          col("conv_a"), col("n_b"), col("conv_b"), tauSq = 0.01)
+        cnt.select(lit(k).as("look"),
+            lit(cuts(k - 1)).as("wk_cut"),
+            col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
+            round(theta, 6).as("theta"),
+            round(pNow, 6).as("p_now"),
+            pNow.as("p_raw"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$looksDir/look_$k")
+      }
       // publish: the always-valid p is the running min over the looks
       // observed so far — the only cross-look state, and it lives in
       // the (bounded, ≤looks-row) look log, not in per-user state.
@@ -2687,14 +2100,8 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val (sel, media) = Planted.imageMedia(s, dir)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s47_stream_src"
-      val sigRoot = s"$base/s47_sigs"
-      val mediaDir = s"$base/s47_media"
-      Seq(srcDir, sigRoot, mediaDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+        "s47_stream_src", "s47_sigs", "s47_media")
       // render the fixture corpus ONCE; the per-batch splits read the
       // staged parquet back — filtering the mapPartitions render
       // directly would re-render the whole corpus per split (it can't
@@ -2709,32 +2116,20 @@ object Streaming {
       // split scatters each planted trio across batches.
       writeSplitSingle(staged,
         pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val dec = graft.pipeline.Multimodal
-            .withDecodedGray(graft.streaming.Streams.fanOutBatch(batch),
-              "media")
-            .filter(col("gray").isNotNull)
-          // repartition(1), NOT coalesce(1): coalesce is narrow and
-          // would collapse the fanned-out decode back into the single
-          // writer task; the exchange ships only (id, sig) longs
-          dec.select(col("doc_id").as("id"),
-              org.apache.spark.sql.graft.VectorExpressions.dhash64(
-                col("gray"), col("img_w"), col("img_h")).as("sig"))
-            .repartition(1).write.mode("overwrite")
-            .parquet(s"$sigRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val dec = graft.pipeline.Multimodal
+          .withDecodedGray(Streams.fanOutBatch(batch),
+            "media")
+          .filter(col("gray").isNotNull)
+        // repartition(1), NOT coalesce(1): coalesce is narrow and
+        // would collapse the fanned-out decode back into the single
+        // writer task; the exchange ships only (id, sig) longs
+        dec.select(col("doc_id").as("id"),
+            org.apache.spark.sql.graft.VectorExpressions.dhash64(
+              col("gray"), col("img_w"), col("img_h")).as("sig"))
+          .repartition(1).write.mode("overwrite")
+          .parquet(s"$sigRoot/b_$batchId")
+      }
       val sigs = s.read.option("recursiveFileLookup", "true")
         .parquet(sigRoot)
       val pairs = graft.pipeline.Dedup.hammingPairs(sigs,
@@ -2766,14 +2161,8 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val (sel, media) = Planted.audioMedia(s, dir)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s48_stream_src"
-      val sigRoot = s"$base/s48_sigs"
-      val mediaDir = s"$base/s48_media"
-      Seq(srcDir, sigRoot, mediaDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+        "s48_stream_src", "s48_sigs", "s48_media")
       // render the fixture corpus ONCE; per-batch splits read the staged
       // parquet back (the s47 lesson: filtering the mapPartitions render
       // directly re-renders the whole corpus per split)
@@ -2781,30 +2170,18 @@ object Streaming {
       val staged = s.read.parquet(mediaDir)
       writeSplitSingle(staged,
         pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val dec = graft.pipeline.Multimodal
-            .withDecodedPcm(graft.streaming.Streams.fanOutBatch(batch),
-              "media")
-            .filter(col("pcm").isNotNull)
-          // repartition(1), NOT coalesce(1) — the s47 note
-          dec.select(col("doc_id").as("id"),
-              org.apache.spark.sql.graft.VectorExpressions.audiohash64(
-                col("pcm")).as("sig"))
-            .repartition(1).write.mode("overwrite")
-            .parquet(s"$sigRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val dec = graft.pipeline.Multimodal
+          .withDecodedPcm(Streams.fanOutBatch(batch),
+            "media")
+          .filter(col("pcm").isNotNull)
+        // repartition(1), NOT coalesce(1) — the s47 note
+        dec.select(col("doc_id").as("id"),
+            org.apache.spark.sql.graft.VectorExpressions.audiohash64(
+              col("pcm")).as("sig"))
+          .repartition(1).write.mode("overwrite")
+          .parquet(s"$sigRoot/b_$batchId")
+      }
       val sigs = s.read.option("recursiveFileLookup", "true")
         .parquet(sigRoot)
       val pairs = graft.pipeline.Dedup.hammingPairs(sigs,
@@ -2840,14 +2217,8 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val (sel, media) = Planted.videoMedia(s, dir)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s49_stream_src"
-      val sigRoot = s"$base/s49_sigs"
-      val mediaDir = s"$base/s49_media"
-      Seq(srcDir, sigRoot, mediaDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+        "s49_stream_src", "s49_sigs", "s49_media")
       // render the fixture corpus ONCE; per-batch splits read the staged
       // parquet back (mapPartitions renders can't be pruned)
       media.write.mode("overwrite").parquet(mediaDir)
@@ -2858,43 +2229,29 @@ object Streaming {
       // broadcast lesson again). Scope the documented workaround —
       // a smaller columnar batch — around the media reads only; the
       // publish-side (id, sig) long reads restore the default.
-      val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
-      val prevBatchSize = s.conf.get(batchKey, "4096")
-      s.conf.set(batchKey, "256")
-      try {
+      Streams.withConf(s, "spark.sql.parquet.columnarReaderBatchSize",
+          "256") {
         val staged = s.read.parquet(mediaDir)
         writeSplitSingle(staged,
           pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        withStreamShuffle(s, srcDir) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
-            val frames = graft.pipeline.Multimodal
-              .withDecodedFrames(
-                graft.streaming.Streams.fanOutBatch(batch), "media")
-              .filter(col("gray").isNotNull)
-            // repartition(1), NOT coalesce(1) — the s47 note (the
-            // groupBy exchange sits between, but coalesce(1) would
-            // still collapse the vote stage onto one core)
-            frames.select(col("doc_id").as("id"),
-                org.apache.spark.sql.graft.VectorExpressions.dhash64(
-                  col("gray"), col("img_w"), col("img_h")).as("fsig"))
-              .groupBy("id")
-              .agg(org.apache.spark.sql.graft.VectorExpressions
-                .majorityhash64(collect_list(col("fsig"))).as("sig"))
-              .repartition(1).write.mode("overwrite")
-              .parquet(s"$sigRoot/b_$batchId")
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination() }
-      } finally s.conf.set(batchKey, prevBatchSize)
+        Streams.replay(s, srcDir) { (batch, batchId) =>
+          val frames = graft.pipeline.Multimodal
+            .withDecodedFrames(
+              Streams.fanOutBatch(batch), "media")
+            .filter(col("gray").isNotNull)
+          // repartition(1), NOT coalesce(1) — the s47 note (the
+          // groupBy exchange sits between, but coalesce(1) would
+          // still collapse the vote stage onto one core)
+          frames.select(col("doc_id").as("id"),
+              org.apache.spark.sql.graft.VectorExpressions.dhash64(
+                col("gray"), col("img_w"), col("img_h")).as("fsig"))
+            .groupBy("id")
+            .agg(org.apache.spark.sql.graft.VectorExpressions
+              .majorityhash64(collect_list(col("fsig"))).as("sig"))
+            .repartition(1).write.mode("overwrite")
+            .parquet(s"$sigRoot/b_$batchId")
+        }
+      }
       val sigs = s.read.option("recursiveFileLookup", "true")
         .parquet(sigRoot)
       val pairs = graft.pipeline.Dedup.hammingPairs(sigs,
@@ -2925,14 +2282,8 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY clip_id""".stripMargin) { (s, dir) =>
       val (sel, clips, grabs) = Planted.frameGrabCorpus(s, dir)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s50_stream_src"
-      val sigRoot = s"$base/s50_sigs"
-      val mediaDir = s"$base/s50_media"
-      Seq(srcDir, sigRoot, mediaDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+        "s50_stream_src", "s50_sigs", "s50_media")
       // render BOTH corpora once (the s47 lesson); the kind column
       // routes each row to its decoder inside the batch
       clips.withColumn("kind", lit("clip"))
@@ -2940,37 +2291,23 @@ object Streaming {
         .write.mode("overwrite").parquet(mediaDir)
       // wide-binary columnar batches: same contiguous-reservation OOM
       // as s49 at the 100× sweep — shrink around the media reads only
-      val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
-      val prevBatchSize = s.conf.get(batchKey, "4096")
-      s.conf.set(batchKey, "256")
-      try {
+      Streams.withConf(s, "spark.sql.parquet.columnarReaderBatchSize",
+          "256") {
         val staged = s.read.parquet(mediaDir)
         writeSplitSingle(staged,
           pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        withStreamShuffle(s, srcDir) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
-            val fanned = graft.streaming.Streams.fanOutBatch(batch)
-            val frameSigs = graft.pipeline.Dedup.frameGrabClipSigs(
-              fanned.filter(col("kind") === "clip"), "doc_id", "media")
-            val grabSigs = graft.pipeline.Dedup.frameGrabImageSigs(
-              fanned.filter(col("kind") === "grab"), "doc_id", "media")
-            // repartition(1), NOT coalesce(1) — the s47 note
-            frameSigs.unionAll(grabSigs)
-              .repartition(1).write.mode("overwrite")
-              .parquet(s"$sigRoot/b_$batchId")
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination() }
-      } finally s.conf.set(batchKey, prevBatchSize)
+        Streams.replay(s, srcDir) { (batch, batchId) =>
+          val fanned = Streams.fanOutBatch(batch)
+          val frameSigs = graft.pipeline.Dedup.frameGrabClipSigs(
+            fanned.filter(col("kind") === "clip"), "doc_id", "media")
+          val grabSigs = graft.pipeline.Dedup.frameGrabImageSigs(
+            fanned.filter(col("kind") === "grab"), "doc_id", "media")
+          // repartition(1), NOT coalesce(1) — the s47 note
+          frameSigs.unionAll(grabSigs)
+            .repartition(1).write.mode("overwrite")
+            .parquet(s"$sigRoot/b_$batchId")
+        }
+      }
       val sigs = s.read.option("recursiveFileLookup", "true")
         .parquet(sigRoot)
       val pairs = graft.pipeline.Dedup.frameGrabPairsFromSigs(sigs,
@@ -2997,33 +2334,17 @@ object Streaming {
         Pipeline.bpeTrainOracleSql(10)) { (s, dir) =>
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s51_stream_src"
-      val histRoot = s"$base/s51_hist"
-      Seq(srcDir, histRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, histRoot) = Streams.scratchDirs(
+        "s51_stream_src", "s51_hist")
       writeSplitSingle(docs,
         pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.select(explode(graft.pipeline.TextAnalysis.tokens(
-              lower(col("text")))).as("w"))
-            .groupBy("w").agg(count(lit(1)).as("cnt"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$histRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.select(explode(graft.pipeline.TextAnalysis.tokens(
+            lower(col("text")))).as("w"))
+          .groupBy("w").agg(count(lit(1)).as("cnt"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$histRoot/b_$batchId")
+      }
       val vocab = s.read.option("recursiveFileLookup", "true")
         .parquet(histRoot)
         .groupBy("w").agg(sum("cnt").as("cnt"))
@@ -3045,34 +2366,18 @@ object Streaming {
         Pipeline.bpeEncodeOracleSql(10)) { (s, dir) =>
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s52_stream_src"
-      val histRoot = s"$base/s52_hist"
-      Seq(srcDir, histRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, histRoot) = Streams.scratchDirs(
+        "s52_stream_src", "s52_hist")
       writeSplitSingle(docs,
         pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.select(col("doc_id"),
-              explode(graft.pipeline.TextAnalysis.tokens(
-                lower(col("text")))).as("w"))
-            .groupBy("doc_id", "w").agg(count(lit(1)).as("n"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$histRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.select(col("doc_id"),
+            explode(graft.pipeline.TextAnalysis.tokens(
+              lower(col("text")))).as("w"))
+          .groupBy("doc_id", "w").agg(count(lit(1)).as("n"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$histRoot/b_$batchId")
+      }
       val state = s.read.option("recursiveFileLookup", "true")
         .parquet(histRoot)
         .groupBy("doc_id", "w").agg(sum("n").as("n"))
@@ -3108,14 +2413,8 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY rec_id""".stripMargin) { (s, dir) =>
       val (sel, recs, snips) = Planted.audioSnippetCorpus(s, dir)
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s54_stream_src"
-      val sigRoot = s"$base/s54_sigs"
-      val mediaDir = s"$base/s54_media"
-      Seq(srcDir, sigRoot, mediaDir)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+        "s54_stream_src", "s54_sigs", "s54_media")
       // wide-binary WRITES have the same contiguous-buffer hazard as
       // the reads: 32 concurrent writers × a default 128 MB row group
       // of ~42 KB recordings OOM'd the 8 GB heap at the 100× sweep —
@@ -3124,41 +2423,27 @@ object Streaming {
         .unionAll(snips.withColumn("kind", lit("snip")))
         .write.option("parquet.block.size", s"${8 * 1024 * 1024}")
         .mode("overwrite").parquet(mediaDir)
-      val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
-      val prevBatchSize = s.conf.get(batchKey, "4096")
-      s.conf.set(batchKey, "256")
-      try {
+      Streams.withConf(s, "spark.sql.parquet.columnarReaderBatchSize",
+          "256") {
         val staged = s.read.parquet(mediaDir)
         writeSplitSingle(staged,
           pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
-        val schema = s.read.parquet(srcDir).schema
-        withStreamShuffle(s, srcDir) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
-            // hopDiv=2 mirrors the batch operator's sliding default
-            // (p200/p202) — the streaming ingest must compute the SAME
-            // window signatures the batch path would
-            val fanned = graft.streaming.Streams.fanOutBatch(batch)
-            val winSigs = graft.pipeline.Dedup.audioWindowSigs(
-              fanned.filter(col("kind") === "rec"), "doc_id", "media", 4,
-              hopDiv = 2)
-            val snipSigs = graft.pipeline.Dedup.audioSnippetSigs(
-              fanned.filter(col("kind") === "snip"), "doc_id", "media")
-            // repartition(1), NOT coalesce(1) — the s47 note
-            winSigs.unionAll(snipSigs)
-              .repartition(1).write.mode("overwrite")
-              .parquet(s"$sigRoot/b_$batchId")
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination() }
-      } finally s.conf.set(batchKey, prevBatchSize)
+        Streams.replay(s, srcDir) { (batch, batchId) =>
+          // hopDiv=2 mirrors the batch operator's sliding default
+          // (p200/p202) — the streaming ingest must compute the SAME
+          // window signatures the batch path would
+          val fanned = Streams.fanOutBatch(batch)
+          val winSigs = graft.pipeline.Dedup.audioWindowSigs(
+            fanned.filter(col("kind") === "rec"), "doc_id", "media", 4,
+            hopDiv = 2)
+          val snipSigs = graft.pipeline.Dedup.audioSnippetSigs(
+            fanned.filter(col("kind") === "snip"), "doc_id", "media")
+          // repartition(1), NOT coalesce(1) — the s47 note
+          winSigs.unionAll(snipSigs)
+            .repartition(1).write.mode("overwrite")
+            .parquet(s"$sigRoot/b_$batchId")
+        }
+      }
       val sigs = s.read.option("recursiveFileLookup", "true")
         .parquet(sigRoot)
       val pairs = graft.pipeline.Dedup.frameGrabPairsFromSigs(sigs,
@@ -3197,12 +2482,8 @@ object Streaming {
         |FROM t2 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val events = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id", "event_type")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s53_stream_src"
-      val viewRoot = s"$base/s53_view"
-      Seq(srcDir, viewRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, viewRoot) = Streams.scratchDirs(
+        "s53_stream_src", "s53_view")
       // the changelog: base rows as three insert batches, then the
       // insert commit, then the delete commit (old rows, sign −1)
       writeSplitSingle(events.withColumn("sign", lit(1)),
@@ -3227,31 +2508,19 @@ object Streaming {
         .agg(sum("user_id").cast("long").as("n_rows"),
           sum("user_id").cast("long").as("sum_user"))
         .coalesce(1).write.mode("overwrite").parquet(s"$viewRoot/v0")
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          val deltaView = batch.groupBy("event_type")
-            .agg(sum("sign").cast("long").as("n_rows"),
-              sum(col("user_id") * col("sign")).cast("long")
-                .as("sum_user"))
-          val merged = deltaView.unionAll(
-              s.read.parquet(s"$viewRoot/v$batchId"))
-            .groupBy("event_type")
-            .agg(sum("n_rows").cast("long").as("n_rows"),
-              sum("sum_user").cast("long").as("sum_user"))
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$viewRoot/v${batchId + 1}")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        val deltaView = batch.groupBy("event_type")
+          .agg(sum("sign").cast("long").as("n_rows"),
+            sum(col("user_id") * col("sign")).cast("long")
+              .as("sum_user"))
+        val merged = deltaView.unionAll(
+            s.read.parquet(s"$viewRoot/v$batchId"))
+          .groupBy("event_type")
+          .agg(sum("n_rows").cast("long").as("n_rows"),
+            sum("sum_user").cast("long").as("sum_user"))
+        merged.coalesce(1).write.mode("overwrite")
+          .parquet(s"$viewRoot/v${batchId + 1}")
+      }
       s.read.parquet(s"$viewRoot/v${latestGen(viewRoot)}")
         .filter(col("n_rows") > 0)
         .orderBy("event_type")
@@ -3311,32 +2580,16 @@ object Streaming {
         .select(col("doc_id"), col("n_chars").cast("long").as("x"),
           (substring(md5(col("doc_id").cast("string")), 1, 1) < "c")
             .as("cal"))
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s45_stream_src"
-      val histRoot = s"$base/s45_hist"
-      Seq(srcDir, histRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, histRoot) = Streams.scratchDirs(
+        "s45_stream_src", "s45_hist")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.groupBy("x", "cal")
-            .agg(count(lit(1)).cast("long").as("c"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$histRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.groupBy("x", "cal")
+          .agg(count(lit(1)).cast("long").as("c"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$histRoot/b_$batchId")
+      }
       val hist = s.read.option("recursiveFileLookup", "true")
         .parquet(histRoot)
         .groupBy("x", "cal")
@@ -3415,36 +2668,20 @@ object Streaming {
       // steps=1: the published model the batch p179 gate calibrates
       val (_, w) = TextAnalysis.logregFit(docs, steps = 1, lr = 1.0,
         posLang = "en", langCol = "lang", textCol = "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s46_stream_src"
-      val binRoot = s"$base/s46_bins"
-      Seq(srcDir, binRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, binRoot) = Streams.scratchDirs(
+        "s46_stream_src", "s46_bins")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          TextAnalysis.logregScore(batch, w)
-            .select(least(floor(col("p") * 100), lit(99L))
-              .cast("long").as("bin"), col("yl"))
-            .groupBy("bin")
-            .agg(count(lit(1)).cast("long").as("n"),
-              coalesce(sum(col("yl")), lit(0L)).cast("long").as("pos"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$binRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        TextAnalysis.logregScore(batch, w)
+          .select(least(floor(col("p") * 100), lit(99L))
+            .cast("long").as("bin"), col("yl"))
+          .groupBy("bin")
+          .agg(count(lit(1)).cast("long").as("n"),
+            coalesce(sum(col("yl")), lit(0L)).cast("long").as("pos"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$binRoot/b_$batchId")
+      }
       val merged = s.read.option("recursiveFileLookup", "true")
         .parquet(binRoot)
         .groupBy("bin")
@@ -3492,37 +2729,19 @@ object Streaming {
       import graft.pipeline.Corpus
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "source")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s40_stream_src"
-      val cntRoot = s"$base/s40_counts"
-      val candRoot = s"$base/s40_cands"
-      Seq(srcDir, cntRoot, candRoot)
-        .foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, cntRoot, candRoot) = Streams.scratchDirs(
+        "s40_stream_src", "s40_counts", "s40_cands")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.groupBy("source")
-            .agg(count(lit(1)).cast("long").as("n"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$cntRoot/b_$batchId")
-          Corpus.stratumTopK(batch, 200L)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$candRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.groupBy("source")
+          .agg(count(lit(1)).cast("long").as("n"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$cntRoot/b_$batchId")
+        Corpus.stratumTopK(batch, 200L)
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$candRoot/b_$batchId")
+      }
       // recursiveFileLookup instead of b_* globs: see the s39 note
       val counts = s.read.option("recursiveFileLookup", "true")
         .parquet(cntRoot)
@@ -3638,34 +2857,18 @@ object Streaming {
       // scoring — an evaluation stream consumes a published model)
       val (_, w) = TextAnalysis.logregFit(docs, steps = 3, lr = 1.0,
         posLang = "en", langCol = "lang", textCol = "text")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s41_stream_src"
-      val cntRoot = s"$base/s41_hist"
-      Seq(srcDir, cntRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, cntRoot) = Streams.scratchDirs(
+        "s41_stream_src", "s41_hist")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          TextAnalysis.logregScore(batch, w)
-            .groupBy("p")
-            .agg(count(lit(1)).cast("long").as("c"),
-              sum(col("yl")).cast("long").as("np"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$cntRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        TextAnalysis.logregScore(batch, w)
+          .groupBy("p")
+          .agg(count(lit(1)).cast("long").as("c"),
+            sum(col("yl")).cast("long").as("np"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$cntRoot/b_$batchId")
+      }
       val merged = s.read.option("recursiveFileLookup", "true")
         .parquet(cntRoot)
         .groupBy("p")
@@ -3693,33 +2896,17 @@ object Streaming {
       graft.operators.Pipeline.kmOracleSql) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id", "ts")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s42_stream_src"
-      val stateRoot = s"$base/s42_spans"
-      Seq(srcDir, stateRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+        "s42_stream_src", "s42_spans")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.groupBy("user_id")
-            .agg(min(unix_micros(col("ts"))).cast("long").as("fw"),
-              max(unix_micros(col("ts"))).cast("long").as("lw"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$stateRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.groupBy("user_id")
+          .agg(min(unix_micros(col("ts"))).cast("long").as("fw"),
+            max(unix_micros(col("ts"))).cast("long").as("lw"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$stateRoot/b_$batchId")
+      }
       val merged = s.read.option("recursiveFileLookup", "true")
         .parquet(stateRoot)
         .groupBy("user_id")
@@ -3750,33 +2937,17 @@ object Streaming {
       graft.operators.Pipeline.logRankOracleSql) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id", "ts")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s55_stream_src"
-      val stateRoot = s"$base/s55_spans"
-      Seq(srcDir, stateRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+        "s55_stream_src", "s55_spans")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.groupBy("user_id")
-            .agg(min(unix_micros(col("ts"))).cast("long").as("fw"),
-              max(unix_micros(col("ts"))).cast("long").as("lw"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$stateRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.groupBy("user_id")
+          .agg(min(unix_micros(col("ts"))).cast("long").as("fw"),
+            max(unix_micros(col("ts"))).cast("long").as("lw"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$stateRoot/b_$batchId")
+      }
       val merged = s.read.option("recursiveFileLookup", "true")
         .parquet(stateRoot)
         .groupBy("user_id")
@@ -3822,31 +2993,15 @@ object Streaming {
         |FROM f""".stripMargin) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id")
-      val base = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-      val srcDir = s"$base/s43_stream_src"
-      val stateRoot = s"$base/s43_users"
-      Seq(srcDir, stateRoot).foreach(d => rmTree(new java.io.File(d)))
-      new java.io.File(srcDir).mkdirs()
+      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+        "s43_stream_src", "s43_users")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamShuffle(s, srcDir) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-            batchId: Long) =>
-          batch.select("user_id").distinct()
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$stateRoot/b_$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() }
+      Streams.replay(s, srcDir) { (batch, batchId) =>
+        batch.select("user_id").distinct()
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$stateRoot/b_$batchId")
+      }
       val population = s.read.option("recursiveFileLookup", "true")
         .parquet(stateRoot).distinct()
       graft.operators.Pipeline.srmCheck(population, "8", 0.5)

@@ -5,7 +5,7 @@ package graft.pipeline
   * work: ImageIO's PNG writer runs max-level deflate with adaptive
   * filtering and its reader pays BufferedImage + color-model
   * machinery; both dominated the render/decode stages of every image
-  * gate in MediaMicro).
+  * gate in the OPTIMIZATION_r15.md per-image measurement).
   *
   * PNG is lossless and its decode is bit-exactly specified, so both
   * directions preserve pixels EXACTLY:

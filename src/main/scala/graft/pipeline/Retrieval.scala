@@ -316,28 +316,8 @@ object Retrieval {
     verifyCandidates(paras, cands, threshold)
   }
 
-  /** One-row PPJoin effectiveness diagnostics for [[paragraphNearDupPairs]]:
-    * paragraph count, the naive all-pairs bound P·(P−1)/2, how many
-    * candidate pairs survived the prefix+length filters, and how many
-    * verified — the sub-quadratic evidence the 10× sweeps report.
-    */
-  def paragraphNearDupStats(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.6, minTokens: Int = 5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val (paras, cands) =
-      paragraphCandidates(docs, n, threshold, minTokens, idCol, textCol)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nP = paras.count()
-    val nC = cands.count()
-    val nV = verifyCandidates(paras, cands, threshold).count()
-    Seq((nP, nP * (nP - 1) / 2, nC, nV))
-      .toDF("n_paragraphs", "naive_pairs", "ppjoin_candidates",
-        "verified_pairs")
-  }
-
-  /** (paragraph gram table, PPJoin candidate pairs) — the shared front
-    * half of [[paragraphNearDupPairs]] and [[paragraphNearDupStats]].
+  /** (paragraph gram table, PPJoin candidate pairs) — the front half
+    * of [[paragraphNearDupPairs]].
     */
   private def paragraphCandidates(docs: DataFrame, n: Int,
       threshold: Double, minTokens: Int, idCol: String,

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Mutable per-user state for the flatMapGroupsWithState operator
   * (top-level so Spark can derive a Product encoder). */
@@ -215,13 +216,6 @@ object Streams {
     (hashes, bos.toByteArray)
   }
 
-  /** Execute a streaming pipeline to completion (AvailableNow) into a
-    * memory sink and return the materialized result.
-    *
-    * State-store count = shuffle partitions; a 32-thread local session
-    * would spin up 32 stores per stateful operator, dominating small-SF
-    * runtime — bound it for the gate run and restore after.
-    */
   /** Micro-batch shuffle-partition bound, derived from the staged
     * source's per-batch volume (optimization guide §2.2): AQE partition
     * coalescing is DISABLED inside Structured Streaming, so the reduce
@@ -234,23 +228,48 @@ object Streams {
     * The floor 4 preserves the gate-scale value (state-store count
     * stays partition-order-invariant by the split-merge fuzz
     * contracts); the ceiling is the session's batch parallelism.
-    * `-Dgraft.stream.parts=N` still overrides for A/B measurement.
     */
   def streamShufflePartitions(spark: SparkSession,
-      srcPath: String): Int =
-    sys.props.get("graft.stream.parts").map(_.toInt).getOrElse {
-      val sess = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val f = new java.io.File(srcPath)
-      val batchBytes: Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).toSeq.flatten
-          .filter(x => x.isFile && !x.getName.startsWith("_") &&
-            !x.getName.startsWith("."))
-          .map(_.length()).reduceOption(_ max _).getOrElse(0L)
-      val target = 64L << 20
-      val need = ((batchBytes + target - 1) / target).toInt
-      math.max(4, math.min(if (sess <= 0) 4 else sess, need))
-    }
+      srcPath: String): Int = {
+    val sess = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val f = new java.io.File(srcPath)
+    val batchBytes: Long =
+      if (f.isFile) f.length()
+      else Option(f.listFiles()).toSeq.flatten
+        .filter(x => x.isFile && !x.getName.startsWith("_") &&
+          !x.getName.startsWith("."))
+        .map(_.length()).reduceOption(_ max _).getOrElse(0L)
+    val target = 64L << 20
+    val need = ((batchBytes + target - 1) / target).toInt
+    math.max(4, math.min(if (sess <= 0) 4 else sess, need))
+  }
+
+  /** Run `body` with SQL conf `key` (one with a default) set to
+    * `value`, restoring the previous value afterwards, also when `body`
+    * throws.
+    */
+  def withConf[T](spark: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Run `body` (a streaming query start + await) with
+    * `spark.sql.shuffle.partitions` bounded by
+    * [[streamShufflePartitions]] for the source at `srcPath`. State-store
+    * count = shuffle partitions, and without AQE every micro-batch
+    * aggregation otherwise runs the session's full reduce width over a
+    * few thousand rows — pure scheduler overhead × shuffles × batches.
+    * Partition count never changes a result (every carried state is
+    * partition-order-independent — the split-merge seam fuzz specs).
+    * The session value is restored after the stream completes, so
+    * publish-time batch plans keep the session's parallelism (and AQE).
+    */
+  def withStreamShuffle[T](spark: SparkSession, srcPath: String)(
+      body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions",
+      streamShufflePartitions(spark, srcPath).toString)(body)
 
   /** Fan a staged micro-batch out to the session's cores BEFORE
     * per-row decode/tokenize work (optimization guide §2.6 — idle
@@ -271,20 +290,115 @@ object Streams {
   def fanOutBatch(df: DataFrame): DataFrame =
     graft.pipeline.Dedup.fanOutScan(df)
 
+  /** Execute a streaming pipeline to completion (AvailableNow) into a
+    * memory sink under [[withStreamShuffle]] and return the
+    * materialized result.
+    */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
-      outputMode: String = "complete", srcPath: String = ""): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      streamShufflePartitions(spark, srcPath).toString)
-    try {
-      val q = df.writeStream
+      outputMode: String = "complete", srcPath: String = ""): DataFrame =
+    withStreamShuffle(spark, srcPath) {
+      df.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
       spark.table(name)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+
+  /** `$java.io.tmpdir/graft_fmt/<name>`: a streaming gate's scratch path. */
+  def scratch(name: String): String =
+    java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      "graft_fmt", name).toString
+
+  /** The [[scratch]] paths of `names`, each removed; the first — the
+    * gate's staged source dir — is recreated empty. The others stay
+    * absent until something writes them, so a batch body may test a
+    * side dir's `exists()` to tell the first batch from later ones.
+    */
+  def scratchDirs(names: String*): Seq[String] = {
+    val dirs = names.map(scratch)
+    dirs.foreach(d => rmTree(new java.io.File(d)))
+    dirs.headOption.foreach(d => new java.io.File(d).mkdirs())
+    dirs
   }
+
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
+  /** The file-stream source consumes whole files, so each staged ingest
+    * batch must land as ONE parquet file in the watched dir.
+    */
+  def writeSingle(df: DataFrame, srcDir: String, name: String): Unit = {
+    val tmp = s"$srcDir/_$name"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(srcDir, s"$name.parquet"))
+    rmTree(new java.io.File(tmp))
+  }
+
+  /** Single-pass ingest staging (optimization guide §2.4 — remove
+    * redundant passes): lands n single-file batches `batch_<b>.parquet`,
+    * b in [lo, lo + n), in ONE pass instead of one filtered rescan of
+    * the source per batch. The rows are partitioned by the batch key on
+    * write (one writer task — no less parallel than a per-batch
+    * coalesce(1)) and each partition's file is moved to its batch name;
+    * rows whose key falls outside the range are dropped. File mtimes
+    * are stamped ascending in b, 1 s apart, so the file-stream source
+    * (which orders by modification time, then path) replays the
+    * batches in key order. A batch key absent from the data (possible
+    * at the smallest SFs) still lands a schema-only parquet file.
+    */
+  def writeSplitSingle(df: DataFrame, batchExpr: Column, n: Int,
+      srcDir: String, lo: Int = 0): Unit = {
+    val tmp = s"$srcDir/_split"
+    df.withColumn("bsplit", batchExpr.cast("long")).coalesce(1)
+      .write.mode("overwrite").partitionBy("bsplit").parquet(tmp)
+    val t0 = System.currentTimeMillis()
+    (lo until lo + n).foreach { b =>
+      val dst = java.nio.file.Paths.get(srcDir, s"batch_$b.parquet")
+      Option(new java.io.File(tmp, s"bsplit=$b").listFiles()).toSeq
+        .flatten.find(_.getName.endsWith(".parquet")) match {
+        case Some(part) => java.nio.file.Files.move(part.toPath, dst)
+        case None =>
+          writeSingle(df.filter(batchExpr.cast("long") === b).limit(0),
+            srcDir, s"batch_$b")
+      }
+      dst.toFile.setLastModified(t0 + b * 1000L)
+      ()
+    }
+    rmTree(new java.io.File(tmp))
+  }
+
+  /** File-stream source over a staged dir: `filesPerTrigger` staged
+    * parquet files per micro-batch (one file = one batch by default),
+    * in mtime order, with the schema read from the staged files.
+    */
+  def fileStream(spark: SparkSession, srcDir: String,
+      filesPerTrigger: Int = 1): DataFrame =
+    spark.readStream.schema(spark.read.parquet(srcDir).schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      .option("pathGlobFilter", "*.parquet")
+      .parquet(srcDir)
+
+  /** Replay the files staged under `srcDir` as a stream and hand each
+    * micro-batch with its batch id to `perBatch` (foreachBatch, run to
+    * completion with AvailableNow under [[withStreamShuffle]]). Batch
+    * ids count from 0 in mtime order. A `perBatch` that throws stops
+    * the stream; the failure reaches the caller as the
+    * StreamingQueryException it causes.
+    */
+  def replay(spark: SparkSession, srcDir: String, filesPerTrigger: Int = 1)(
+      perBatch: (DataFrame, Long) => Unit): Unit =
+    withStreamShuffle(spark, srcDir) {
+      fileStream(spark, srcDir, filesPerTrigger).writeStream
+        .foreachBatch(perBatch)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
 }

@@ -28,15 +28,7 @@ object PlanDump {
       }
     }
     require(names.nonEmpty, "usage: PlanDump [-d sfDir] [-o out] names…")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("local[8]", "8", "WARN")
     val w = new java.io.PrintWriter(out)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)

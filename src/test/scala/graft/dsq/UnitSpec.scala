@@ -17,6 +17,15 @@ class UnitSpec extends SparkSpec {
     assert(row.getAs[Int]("o.y.z") == 1) // boolean → 0/1
   }
 
+  test("errorText: a null or empty message renders as the class name") {
+    assert(Cli.errorText(new NullPointerException()) ==
+      "java.lang.NullPointerException")
+    assert(Cli.errorText(new RuntimeException("")) ==
+      "java.lang.RuntimeException")
+    assert(Cli.errorText(new IllegalStateException("no such column: x")) ==
+      "no such column: x")
+  }
+
   test("convertNumbers: integral vs double vs mixed columns") {
     import spark.implicits._
     val df = Seq(("1", "1.5", "x", "+1"), ("02", "2", "2", "0003.5"))
