@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.streaming.Streams
 
 /** One-off 10× corpus generator for the sf1 validation story (VERDICT r4
   * task 8): the driver ships sf0.1 as the largest scale factor, so the
@@ -101,12 +102,9 @@ object ScaleGen {
     val evScaled = (0 until factor).map { k =>
       ev0.withColumn("event_id", col("event_id") + lit(k * eventQuantum))
     }.reduce(_ unionAll _)
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-    }
     val evTmp = s"$out/_events_tmp"
     evScaled.coalesce(1).write.mode("overwrite").parquet(evTmp)
-    rmTree(new java.io.File(out, "events.parquet")) // stale file OR dir
+    Streams.rmTree(new java.io.File(out, "events.parquet")) // stale file OR dir
     val partStream = java.nio.file.Files.list(java.nio.file.Paths.get(evTmp))
     var moved = false
     try {
@@ -121,7 +119,7 @@ object ScaleGen {
       }
     } finally partStream.close()
     require(moved, "no part file produced for events")
-    rmTree(new java.io.File(evTmp))
+    Streams.rmTree(new java.io.File(evTmp))
 
     // pass the remaining tables through untouched (hard copy, not
     // symlink: the bench keys its ingest fixtures on lineitem mtime)

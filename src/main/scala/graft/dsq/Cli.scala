@@ -102,6 +102,20 @@ object Cli {
       sys.env.getOrElse("DSQ_SHUFFLE_PARTITIONS", "32"), "ERROR",
       "spark.app.name" -> "dsq")
 
+  /** A buffered writer over `Console.out`. Each full buffer reaches the
+    * stream as one `print`, so the stream's own charset encodes the text
+    * exactly as a single `print` of all of it would.
+    */
+  private[dsq] def consoleWriter(): java.io.Writer = {
+    val ps = Console.out
+    new java.io.BufferedWriter(new java.io.Writer {
+      def write(c: Array[Char], off: Int, len: Int): Unit =
+        ps.print(new String(c, off, len))
+      def flush(): Unit = ps.flush()
+      def close(): Unit = ps.flush()
+    }, 1 << 16)
+  }
+
   /** What an unexpected failure prints: its message, or its class name
     * when it has none (an NPE would otherwise print "null").
     */
@@ -149,8 +163,11 @@ object Cli {
       }
       val engine = new Engine(buildSession())
       if (args.opts.interactive) return Repl.loop(engine, files, mimes, args.opts)
-      print(engine.run(files, mimes, args.query, args.opts))
-      println()
+      val out = consoleWriter()
+      try {
+        engine.run(files, mimes, args.query, args.opts, out)
+        out.write(System.lineSeparator())
+      } finally out.flush()
       0
     } catch {
       case DsqError(msg) => System.err.println(msg); 1
@@ -189,9 +206,9 @@ object Repl {
       if (q.nonEmpty) {
         try {
           val df = engine.runQuery(files, mimes, q, opts)
-          val sb = new java.lang.StringBuilder
-          Output.prettyTable(df, sb)
-          print(sb)
+          val out = Cli.consoleWriter()
+          Output.prettyTable(df, out)
+          out.flush()
         } catch {
           case DsqError(msg) => System.err.println(msg)
           case e: Exception => System.err.println(Cli.errorText(e))

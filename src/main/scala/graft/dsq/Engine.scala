@@ -1,7 +1,11 @@
 package graft.dsq
 
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+import scala.collection.mutable
 
 /** Options mirroring the reference CLI surface (main.go:341-432, §2.6 A7). */
 final case class DsqOptions(
@@ -36,6 +40,10 @@ final class Engine(val spark: SparkSession) {
     persistedForRun.foreach(_.unpersist(blocking = false))
     persistedForRun.clear()
   }
+
+  // the -C cache's hashes and resolved views, kept for this engine's
+  // lifetime so a REPL query re-hashes and re-resolves no input
+  private val cacheMemo = new ContentHashCache.Memo
   Stdlib.register(spark)
   // the native pipeline expressions as SQL functions (graft_cosine,
   // graft_simhash, …) — the CLI's SQL surface gets the same codegen'd
@@ -104,7 +112,7 @@ final class Engine(val spark: SparkSession) {
       query: String, opts: DsqOptions): DataFrame = {
     val (macroReplaced, refs) = Dialect.extractTableRefs(query)
     val cache = new ContentHashCache(spark, files, opts.cacheEnabled,
-      opts.convertNumbers)
+      opts.convertNumbers, cacheMemo)
 
     var allColumns = Set.empty[String]
     refs.foreach { r =>
@@ -152,9 +160,9 @@ final class Engine(val spark: SparkSession) {
   }
 
   /** No-query passthrough (reference justDumpResults main.go:579,661-665):
-    * dump the FIRST file as JSON/pretty/schema. */
-  def dumpFile(file: String, mime: Option[String], opts: DsqOptions): String = {
-    val sb = new java.lang.StringBuilder
+    * dump the FIRST file as JSON/pretty/schema into `out`. */
+  def dumpFile(file: String, mime: Option[String], opts: DsqOptions,
+      out: Appendable): Unit = {
     if (opts.schema) {
       val resolved = mime.orElse(Readers.mimeOf(Readers.extensionOf(file)))
       // Avro carries a declared schema with unions; Spark's JSON-inference
@@ -168,30 +176,33 @@ final class Engine(val spark: SparkSession) {
           Shape.ofJsonFileSampled(file, m)
         case _ => Shape.ofTable(readRaw(file, mime).schema)
       }
-      if (opts.pretty) sb.append(Shape.toPretty(shape))
-      else sb.append(Shape.toJson(shape))
+      if (opts.pretty) out.append(Shape.toPretty(shape))
+      else out.append(Shape.toJson(shape))
     } else {
       val flat = readTable(file, mime, opts.convertNumbers)
-      if (opts.pretty) Output.prettyTable(flat, sb)
-      else Output.json(flat, sb)
+      if (opts.pretty) Output.prettyTable(flat, out)
+      else Output.json(flat, out)
     }
-    sb.toString
   }
 
-  /** Full one-shot run → rendered output string. */
+  /** Full one-shot run, rendered into `out` as the rows arrive. */
   def run(files: Seq[String], mimes: Seq[Option[String]],
-      queryOpt: Option[String], opts: DsqOptions): String = {
-    if (opts.schema) return dumpFile(files.head, mimes.headOption.flatten, opts)
+      queryOpt: Option[String], opts: DsqOptions, out: Appendable): Unit =
     queryOpt match {
-      case None => dumpFile(files.head, mimes.headOption.flatten, opts)
-      case Some(q) =>
+      case Some(q) if !opts.schema =>
         try {
           val df = runQuery(files, mimes, q, opts)
-          val sb = new java.lang.StringBuilder
-          if (opts.pretty) Output.prettyTable(df, sb) else Output.json(df, sb)
-          sb.toString
+          if (opts.pretty) Output.prettyTable(df, out) else Output.json(df, out)
         } finally releaseCaches()
+      case _ => dumpFile(files.head, mimes.headOption.flatten, opts, out)
     }
+
+  /** [[run]] into a string. */
+  def run(files: Seq[String], mimes: Seq[Option[String]],
+      queryOpt: Option[String], opts: DsqOptions): String = {
+    val sb = new java.lang.StringBuilder
+    run(files, mimes, queryOpt, opts, sb)
+    sb.toString
   }
 }
 
@@ -200,12 +211,22 @@ final class Engine(val spark: SparkSession) {
   * materialize as parquet under $TMPDIR/dsqspark-cache-<sha1>/<view>;
   * a hit re-reads columnar parquet instead of re-parsing the source —
   * the same ~13× cold/warm gap the reference exploits, but columnar.
+  *
+  * A view is written into a staging dir inside the cache dir together
+  * with its schema ([[ContentHashCache.SchemaFile]]), then renamed onto
+  * `<view>` in one step, so a reader never sees a half-written view and
+  * two writers of one view both end up reading the one that won. A hit
+  * reads the parquet with that schema, so it runs no Spark job.
+  *
+  * `memo` carries resolved state across instances: the REPL makes one
+  * instance per query but one memo per [[Engine]], so an unchanged input
+  * is neither re-hashed nor re-resolved.
   */
 final class ContentHashCache(spark: SparkSession, files: Seq[String],
-    enabled: Boolean, convertNumbers: Boolean = false) {
+    enabled: Boolean, convertNumbers: Boolean = false,
+    memo: ContentHashCache.Memo = new ContentHashCache.Memo) {
 
-  lazy val cacheDir: java.nio.file.Path =
-    ContentHashCache.dirFor(files, convertNumbers)
+  lazy val cacheDir: java.nio.file.Path = memo.dirFor(files, convertNumbers)
 
   private var warnedInvalid = false
 
@@ -220,21 +241,26 @@ final class ContentHashCache(spark: SparkSession, files: Seq[String],
       ingest: () => DataFrame): (DataFrame, Option[Boolean]) = {
     if (!enabled) return (ingest(), None)
     val target = cacheDir.resolve(view)
-    if (Files.exists(target.resolve("_SUCCESS"))) {
-      (spark.read.parquet(target.toString), Some(true))
+    if (ContentHashCache.published(target)) {
+      (memo.frame(target, ContentHashCache.readView(spark, target)), Some(true))
     } else {
       if (!warnedInvalid) {
         System.err.println("Cache invalid, re-import required.")
         warnedInvalid = true
       }
-      val df = ingest()
-      df.write.mode("overwrite").parquet(target.toString)
-      (spark.read.parquet(target.toString), Some(false))
+      memo.drop(target)
+      ContentHashCache.publish(ingest(), target)
+      (memo.frame(target, ContentHashCache.readView(spark, target)), Some(false))
     }
   }
 }
 
 object ContentHashCache {
+
+  /** The flattened schema (`StructType.json`) beside a view's parquet.
+    * Spark's file listing skips `_`-prefixed names.
+    */
+  val SchemaFile = "_schema.json"
 
   /** `$TMPDIR/dsqspark-cache-<sha1 of all file contents>`, suffixed
     * `-n` under `-n`: option flags that change ingestion output are part
@@ -255,5 +281,78 @@ object ContentHashCache {
     val suffix = if (convertNumbers) "-n" else ""
     Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
       s"dsqspark-cache-$hash$suffix")
+  }
+
+  /** Whether the view dir `target` is complete: Spark's `_SUCCESS` and
+    * the schema are both there. A dir without the schema was written by
+    * an older, in-place writer and is ingested again.
+    */
+  private def published(target: java.nio.file.Path): Boolean =
+    Files.exists(target.resolve("_SUCCESS")) &&
+      Files.exists(target.resolve(SchemaFile))
+
+  /** A published view, read with its recorded schema: no Spark job. */
+  private def readView(spark: SparkSession,
+      target: java.nio.file.Path): DataFrame = {
+    val schema = DataType.fromJson(Files.readString(target.resolve(SchemaFile)))
+    spark.read.schema(schema.asInstanceOf[StructType]).parquet(target.toString)
+  }
+
+  /** Write `df` and its schema into a staging dir beside `target`, then
+    * rename it onto `target`. An incomplete `target` is removed first. If
+    * another writer publishes `target` first, the rename fails and its
+    * view is kept.
+    */
+  private def publish(df: DataFrame, target: java.nio.file.Path): Unit = {
+    val staging = target.resolveSibling(
+      s"_${target.getFileName}-${java.util.UUID.randomUUID()}")
+    try {
+      df.write.parquet(staging.toString)
+      Files.writeString(staging.resolve(SchemaFile), df.schema.json)
+      if (!published(target)) Streams.rmTree(target.toFile)
+      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case _: FileSystemException if published(target) =>
+    } finally Streams.rmTree(staging.toFile)
+  }
+
+  /** What a REPL session keeps between queries. Each input list's cache
+    * dir is re-hashed only when a file's path, size, mtime or file key
+    * changed; each view dir's frame is resolved once, and dropped when
+    * the view has gone and is written again. Not thread-safe, like
+    * [[Engine]].
+    */
+  final class Memo {
+    private type Stamp = (Long, FileTime, AnyRef)
+    private val dirs = mutable.Map.empty[(Seq[String], Boolean),
+      (Seq[Stamp], java.nio.file.Path)]
+    private val frames = mutable.Map.empty[java.nio.file.Path, DataFrame]
+
+    def dirFor(files: Seq[String],
+        convertNumbers: Boolean): java.nio.file.Path = {
+      val paths = files.map(f => Paths.get(f).toAbsolutePath.toString)
+      val stamps = paths.map { p =>
+        val a = Files.readAttributes(Paths.get(p), classOf[BasicFileAttributes])
+        (a.size, a.lastModifiedTime, a.fileKey): Stamp
+      }
+      dirs.get((paths, convertNumbers)) match {
+        case Some((seen, dir)) if seen == stamps => dir
+        case old =>
+          // the views of the content this list used to have are dead now
+          old.foreach { case (_, gone) =>
+            frames.filterInPlace((view, _) => !view.startsWith(gone))
+          }
+          val dir = ContentHashCache.dirFor(files, convertNumbers)
+          dirs((paths, convertNumbers)) = (stamps, dir)
+          dir
+      }
+    }
+
+    /** The frame resolved for the published view `target`. */
+    def frame(target: java.nio.file.Path, resolve: => DataFrame): DataFrame =
+      frames.getOrElseUpdate(target, resolve)
+
+    /** Forget `target`'s frame: its view is gone and is written again. */
+    def drop(target: java.nio.file.Path): Unit = frames.remove(target)
   }
 }

@@ -51,8 +51,9 @@ object Flatten {
 
   /** Column-level numeric-affinity conversion (`--convert-numbers`,
     * reference main.go:633-637, sqlite.go:36-49): a string column whose
-    * non-null values all parse numerically becomes numeric — integral if
-    * every value is integral, else double. One aggregate pass decides all
+    * non-null, non-empty values all parse numerically becomes numeric —
+    * integral if every value is integral, else double; an empty value
+    * (a CSV's empty field) becomes null. One aggregate pass decides all
     * columns at once (single job, map-side combine).
     */
   def convertNumbers(df: DataFrame): DataFrame = {
@@ -61,7 +62,7 @@ object Flatten {
     val probes = strCols.flatMap { c =>
       val q = quote(c)
       Seq(
-        count(col(q)).as(s"n_$c"),
+        count(when(col(q) =!= "", true)).as(s"n_$c"),
         count(expr(s"try_cast($q AS DOUBLE)")).as(s"d_$c"),
         count(expr(s"try_cast($q AS BIGINT)")).as(s"l_$c"))
     }

@@ -10,8 +10,11 @@ import org.apache.spark.sql.types._
   * ".0"). The pretty table matches tablewriter's box format with columns
   * sorted alphabetically and a `(N rows)` footer.
   *
-  * Rows stream through `toLocalIterator` — the driver never materializes
-  * the full result, so a huge SELECT spools at scan speed.
+  * Rows come through `toLocalIterator`, one partition per job. `json`
+  * writes each row as it arrives, so the CLI holds one partition of
+  * the result; `prettyTable` holds every row, since it sizes the columns
+  * before it prints. Both write into the caller's `Appendable` (the CLI
+  * passes a buffered writer over stdout).
   */
 object Output {
 
@@ -68,8 +71,9 @@ object Output {
   def json(df: DataFrame, out: Appendable): Unit = {
     val names = df.schema.fieldNames
     val order = names.zipWithIndex.sortBy(_._1)
-    out.append('[')
     val it = df.toLocalIterator()
+    it.hasNext // runs the first job, so a query that fails writes nothing
+    out.append('[')
     var first = true
     while (it.hasNext) {
       val row = it.next()

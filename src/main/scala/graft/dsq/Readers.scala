@@ -64,18 +64,17 @@ object Readers {
       case other => throw DsqError(s"Unknown mimetype: $other.")
     }
 
-  /** All values strings (reference README.md:552-556); empty field = "",
-    * not null. */
+  /** All values strings (reference README.md:552-556); an empty field,
+    * quoted or not, is "", not null. Spark's parser makes any empty field
+    * null whatever `nullValue` is set to, so nulls are mapped back.
+    */
   def csv(spark: SparkSession, path: String, sep: String): DataFrame =
     spark.read
       .option("header", "true")
       .option("inferSchema", "false")
       .option("sep", sep)
-      // dsq CSV has no nulls: empty field = "" (taxi groups on ""). Point
-      // nullValue at an impossible sentinel so "" survives as "".
-      .option("nullValue", "\u0000")
-      .option("emptyValue", "")
       .csv(path)
+      .na.fill("")
 
   /** Whole-file JSON array of objects (reference main.go:252-259 rejects
     * anything else with NotAnArrayOfObjectsError). */

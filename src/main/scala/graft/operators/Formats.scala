@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.dsq.{DsqOptions, Engine, Flatten, Readers}
+import graft.streaming.Streams
 
 /** Source-format coverage under the driver's DuckDB gate (SURVEY §2.1):
   * each query writes a driver table out in a text format, reads it back
@@ -16,20 +17,6 @@ object Formats {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  private def tmp(name: String): String = {
-    val p = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt", name)
-    p.toString
-  }
-
-  /** Run `f` with ANSI disabled, restoring the previous setting (the dsq
-    * engine runs SQLite-affinity semantics; driver queries keep theirs).
-    */
-  private def withDsqSession[T](s: SparkSession)(f: => T): T = {
-    val prev = s.conf.get("spark.sql.ansi.enabled", "true")
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    try f finally s.conf.set("spark.sql.ansi.enabled", prev)
-  }
 
   /** Driver-side fixture writers for the formats Spark has no native
     * writer for (cjson/avro/yaml/xlsx/ods — all inherently CLI-sized;
@@ -120,10 +107,10 @@ object Formats {
       """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
         |  CAST(n_regionkey AS BIGINT) AS n_regionkey
         |FROM nation""".stripMargin) { (s, dir) =>
-      val out = tmp("nation_csv")
+      val out = Streams.scratch("nation_csv")
       t(s, dir, "nation").coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(out)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten.convertNumbers(Flatten(Readers.csv(s, out, ",")))
           .select("n_nationkey", "n_name", "n_regionkey")
       }
@@ -132,10 +119,10 @@ object Formats {
     QueryDef("f02_tsv_roundtrip",
       """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
         |FROM region""".stripMargin) { (s, dir) =>
-      val out = tmp("region_tsv")
+      val out = Streams.scratch("region_tsv")
       t(s, dir, "region").coalesce(1).write.mode("overwrite")
         .option("header", "true").option("sep", "\t").csv(out)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten.convertNumbers(Flatten(Readers.csv(s, out, "\t")))
           .select("r_regionkey", "r_name")
       }
@@ -145,9 +132,9 @@ object Formats {
       """SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS s_nationkey,
         |  s_acctbal
         |FROM supplier""".stripMargin) { (s, dir) =>
-      val out = tmp("supplier_jsonl")
+      val out = Streams.scratch("supplier_jsonl")
       t(s, dir, "supplier").coalesce(1).write.mode("overwrite").json(out)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(s.read.json(out))
           .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       }
@@ -157,13 +144,13 @@ object Formats {
       """SELECT c_custkey AS id, c_name AS "info.name",
         |  c_mktsegment AS "info.seg"
         |FROM customer""".stripMargin) { (s, dir) =>
-      val out = tmp("customer_nested")
+      val out = Streams.scratch("customer_nested")
       t(s, dir, "customer")
         .select(col("c_custkey").as("id"),
           struct(col("c_name").as("name"), col("c_mktsegment").as("seg"))
             .as("info"))
         .coalesce(1).write.mode("overwrite").json(out)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(s.read.json(out)).select(col("id"),
           col("`info.name`"), col("`info.seg`"))
       }
@@ -173,14 +160,14 @@ object Formats {
       """SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
         |  CAST(user_id AS BIGINT) AS user_id
         |FROM events WHERE event_type = 'signup'""".stripMargin) { (s, dir) =>
-      val out = tmp("events_logfmt")
+      val out = Streams.scratch("events_logfmt")
       t(s, dir, "events").filter(col("event_type") === "signup")
         .select(concat(
           lit("event_id="), col("event_id"),
           lit(" event_type="), col("event_type"),
           lit(" user_id="), col("user_id")).as("value"))
         .coalesce(1).write.mode("overwrite").text(out)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Readers.logfmt(s, out)
           .select("event_id", "event_type", "user_id")
       }
@@ -201,9 +188,9 @@ object Formats {
         .select(to_json(struct(col("n_nationkey"), col("n_name"),
           col("n_regionkey"))))
         .collect().map(_.getString(0))
-      val file = writeFile(tmp("nation_cjson") + "/nation.cjson",
+      val file = writeFile(Streams.scratch("nation_cjson") + "/nation.cjson",
         rows.mkString("")) // concatenated {}{}{} — no separators
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(Readers.cjson(s, file))
           .select("n_nationkey", "n_name", "n_regionkey")
       }
@@ -212,10 +199,10 @@ object Formats {
     QueryDef("f10_orc_roundtrip",
       """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
         |FROM region""".stripMargin) { (s, dir) =>
-      val out = tmp("region_orc")
+      val out = Streams.scratch("region_orc")
       t(s, dir, "region").select("r_regionkey", "r_name")
         .coalesce(1).write.mode("overwrite").orc(out)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Readers.read(s, out, "orc")
           .select(col("r_regionkey").cast("long").as("r_regionkey"),
             col("r_name"))
@@ -230,9 +217,9 @@ object Formats {
         r.getAs[Number]("n_nationkey").longValue(),
         r.getAs[String]("n_name"),
         r.getAs[Number]("n_regionkey").longValue()))
-      val file = writeAvroNation(tmp("nation_avro") + "/nation.avro",
+      val file = writeAvroNation(Streams.scratch("nation_avro") + "/nation.avro",
         rows.toSeq)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(Readers.avro(s, file))
           .select("n_nationkey", "n_name", "n_regionkey")
       }
@@ -250,9 +237,9 @@ object Formats {
           m.put("r_name", r.getAs[String]("r_name"))
           m: Object
         }.toList.asJava
-      val file = writeFile(tmp("region_yaml") + "/region.yaml",
+      val file = writeFile(Streams.scratch("region_yaml") + "/region.yaml",
         new org.yaml.snakeyaml.Yaml().dump(items))
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(Readers.yaml(s, file)).select("r_regionkey", "r_name")
       }
     },
@@ -265,9 +252,9 @@ object Formats {
         r.getAs[Number]("n_nationkey").longValue().toString,
         r.getAs[String]("n_name"),
         r.getAs[Number]("n_regionkey").longValue().toString)).toSeq
-      val file = writeXlsx(tmp("nation_xlsx") + "/nation.xlsx",
+      val file = writeXlsx(Streams.scratch("nation_xlsx") + "/nation.xlsx",
         Seq("n_nationkey", "n_name", "n_regionkey") +: data)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten.convertNumbers(Flatten(Readers.read(s, file, "xlsx")))
           .select("n_nationkey", "n_name", "n_regionkey")
       }
@@ -279,9 +266,9 @@ object Formats {
       val data = t(s, dir, "region").collect().map(r => Seq(
         r.getAs[Number]("r_regionkey").longValue().toString,
         r.getAs[String]("r_name"))).toSeq
-      val file = writeOds(tmp("region_ods") + "/region.ods",
+      val file = writeOds(Streams.scratch("region_ods") + "/region.ods",
         Seq("r_regionkey", "r_name") +: data)
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten.convertNumbers(Flatten(Readers.read(s, file, "ods")))
           .select("r_regionkey", "r_name")
       }
@@ -292,12 +279,12 @@ object Formats {
     QueryDef("f06_dsq_dialect",
       """SELECT n_name || '-x' AS tagged FROM nation
         |WHERE regexp_matches(n_name, '^NATION_1[0-9]$')""".stripMargin) { (s, dir) =>
-      val out = tmp("nation_dsq_csv")
+      val out = Streams.scratch("nation_dsq_csv")
       t(s, dir, "nation").coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(out)
       val file = new java.io.File(out).listFiles()
         .find(_.getName.endsWith(".csv")).get.getPath
-      withDsqSession(s) {
+      Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         val engine = new Engine(s)
         engine.runQuery(Seq(file), Seq(None),
           """SELECT "n_name" || '-x' AS tagged FROM {} WHERE "n_name" REGEXP '^NATION_1[0-9]$'""",
@@ -314,7 +301,7 @@ object Formats {
       """SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
         |  CAST(user_id AS BIGINT) AS user_id
         |FROM events WHERE event_type = 'click'""".stripMargin) { (s, dir) =>
-      val out = tmp("events_logfmt_v2")
+      val out = Streams.scratch("events_logfmt_v2")
       t(s, dir, "events").filter(col("event_type") === "click")
         .select(concat(
           lit("event_id="), col("event_id"),
@@ -364,7 +351,7 @@ object Formats {
         |  CASE WHEN event_id % 7 = 0 THEN NULL
         |    ELSE CAST(event_id AS BIGINT) END AS body_bytes
         |FROM events WHERE event_id % 3 = 0""".stripMargin) { (s, dir) =>
-      val out = tmp("events_accesslog_v2")
+      val out = Streams.scratch("events_accesslog_v2")
       t(s, dir, "events")
         .select(concat(
           lit("10.0.0."), col("user_id"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.streaming.Streams
 
 /** Scale-pattern demonstrations under the oracle gate: each runs a
   * physical-design technique (bucketing, salting) whose *result* is
@@ -516,16 +517,12 @@ object Scale {
     * convenience); production appends stats at commit time from the
     * written batch itself — exactly what s17 does in its foreachBatch.
     */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   private[graft] def incrementalScan(s: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Paths.get(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
     val dataP = s"$root/x22_data"
     val maniP = s"$root/x22_manifest"
-    rmTree(new java.io.File(dataP)); rmTree(new java.io.File(maniP))
+    Streams.rmTree(new java.io.File(dataP)); Streams.rmTree(new java.io.File(maniP))
     val events = t(s, dir, "events").select("event_id", "user_id")
     // snapshot 1: the 80% residue classes, 12 range files
     events.filter(col("event_id") % 5 =!= 0)
@@ -725,7 +722,7 @@ object Scale {
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
     val dataP = s"$root/x40_target"
     val deltaP = s"$root/x40_delta"
-    rmTree(new java.io.File(dataP)); rmTree(new java.io.File(deltaP))
+    Streams.rmTree(new java.io.File(dataP)); Streams.rmTree(new java.io.File(deltaP))
     val events = t(s, dir, "events").select("event_id", "user_id")
     events.repartitionByRange(16, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -2618,7 +2615,7 @@ object Scale {
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
     val p0 = s"$root/x43_spec0"
     val p1 = s"$root/x43_spec1"
-    Seq(p0, p1).foreach(p => rmTree(new java.io.File(p)))
+    Seq(p0, p1).foreach(p => Streams.rmTree(new java.io.File(p)))
     val e = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"))
@@ -2687,7 +2684,7 @@ object Scale {
     val dataP = s"$root/x41_base"
     val appendP = s"$root/x41_append"
     val deltaP = s"$root/x41_delta"
-    Seq(dataP, appendP, deltaP).foreach(p => rmTree(new java.io.File(p)))
+    Seq(dataP, appendP, deltaP).foreach(p => Streams.rmTree(new java.io.File(p)))
     val events = t(s, dir, "events").select("event_id", "user_id")
     events.repartitionByRange(8, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -2757,7 +2754,7 @@ object Scale {
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
     val baseP = s"$root/x45_base"
     val dvP = s"$root/x45_dv"
-    Seq(baseP, dvP).foreach(p => rmTree(new java.io.File(p)))
+    Seq(baseP, dvP).foreach(p => Streams.rmTree(new java.io.File(p)))
     val events = t(s, dir, "events").select("event_id", "user_id")
     events.repartitionByRange(8, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -2847,7 +2844,7 @@ object Scale {
     val root = java.nio.file.Paths.get(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
     val viewP = s"$root/x46_view"
-    rmTree(new java.io.File(viewP))
+    Streams.rmTree(new java.io.File(viewP))
     val events = t(s, dir, "events")
       .select("event_id", "user_id", "event_type")
     // the two CDC commits: inserts are re-keyed copies (offset clears
@@ -2909,7 +2906,7 @@ object Scale {
     val appP = s"$root/x47_append"
     val dvP = s"$root/x47_dv"
     val viewP = s"$root/x47_view"
-    Seq(baseP, appP, dvP, viewP).foreach(p => rmTree(new java.io.File(p)))
+    Seq(baseP, appP, dvP, viewP).foreach(p => Streams.rmTree(new java.io.File(p)))
     val events = t(s, dir, "events")
       .select("event_id", "user_id", "event_type")
     events.repartitionByRange(8, col("event_id"))
