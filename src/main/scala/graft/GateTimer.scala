@@ -33,7 +33,9 @@ object GateTimer {
         // per-row expressions the gate exists to measure (column
         // pruning drops scoring projections, EliminateSorts drops
         // ordering), silently under-timing projection-shaped gates
-        try {
+        // one scratch scope per run: its barriers and staged dirs are
+        // gone once the run's rows are counted
+        try Scratch.scoped(spark) {
           val df = fn(spark, dir)
           df.write.format("noop").mode("overwrite").save()
           best = best.min((System.nanoTime() - t0) / 1e9)
@@ -46,9 +48,6 @@ object GateTimer {
             System.err.println(
               s"[gatetimer] $name FAILED: ${e.getMessage}")
         }
-        // reclaim this run's barrier scratch (the run is fully
-        // materialized; repeated timing must not accumulate to exit)
-        graft.pipeline.Dedup.releaseAllBarriers()
       }
       if (best == Double.MaxValue) s""""$name":{"sec":-1,"rows":-1}"""
       else f""""$name":{"sec":$best%.2f,"rows":$rows}"""

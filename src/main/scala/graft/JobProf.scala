@@ -65,10 +65,12 @@ object JobProf {
     (0 until runs).foreach { i =>
       jobs.synchronized { jobs.clear() }; stages.synchronized { stages.clear() }
       val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      val tCons = (System.nanoTime() - t0) / 1e9
-      df.write.format("noop").mode("overwrite").save()
-      val tAll = (System.nanoTime() - t0) / 1e9
+      val (tCons, tAll) = Scratch.scoped(spark) {
+        val df = fn(spark, dir)
+        val tCons = (System.nanoTime() - t0) / 1e9
+        df.write.format("noop").mode("overwrite").save()
+        (tCons, (System.nanoTime() - t0) / 1e9)
+      }
       Thread.sleep(300) // let the listener bus drain
       println(f"\n===== $name run $i: total $tAll%.2f s (construction $tCons%.2f s)")
       var sumJobs = 0.0
@@ -88,7 +90,6 @@ object JobProf {
       }
       println(f"sum(jobs) $sumJobs%.2f s; driver gaps ${tAll - sumJobs}%.2f s")
       if (tAll < best) best = tAll
-      graft.pipeline.Dedup.releaseAllBarriers()
     }
     println(f"\nbest total: $best%.2f s")
     spark.stop()

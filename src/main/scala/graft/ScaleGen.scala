@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.streaming.Streams
 
 /** One-off 10× corpus generator for the sf1 validation story (VERDICT r4
   * task 8): the driver ships sf0.1 as the largest scale factor, so the
@@ -104,7 +103,7 @@ object ScaleGen {
     }.reduce(_ unionAll _)
     val evTmp = s"$out/_events_tmp"
     evScaled.coalesce(1).write.mode("overwrite").parquet(evTmp)
-    Streams.rmTree(new java.io.File(out, "events.parquet")) // stale file OR dir
+    Scratch.rmTree(new java.io.File(out, "events.parquet")) // stale file OR dir
     val partStream = java.nio.file.Files.list(java.nio.file.Paths.get(evTmp))
     var moved = false
     try {
@@ -119,7 +118,7 @@ object ScaleGen {
       }
     } finally partStream.close()
     require(moved, "no part file produced for events")
-    Streams.rmTree(new java.io.File(evTmp))
+    Scratch.rmTree(new java.io.File(evTmp))
 
     // pass the remaining tables through untouched (hard copy, not
     // symlink: the bench keys its ingest fixtures on lineitem mtime)

@@ -18,13 +18,17 @@ object Verify {
     // their rows silently vanished from CORRECTNESS instead of going red.
     // Failures still don't abort the dump (one bad query must not zero the
     // round), but they are listed in _failed.json next to the results.
+    // One scratch scope for the whole dump: p25/p38/p51 share one
+    // near-dup graph, and nothing of it is left once the dump is written.
     val failed = scala.collection.mutable.ListBuffer[String]()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
+    Scratch.scoped(spark) {
+      SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
+        }
       }
     }
     Files.writeString(Paths.get(s"$outDir/_failed.json"),

@@ -1,9 +1,9 @@
 package graft.dsq
 
-import graft.streaming.Streams
+import graft.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
-import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.collection.mutable
 
@@ -298,23 +298,14 @@ object ContentHashCache {
     spark.read.schema(schema.asInstanceOf[StructType]).parquet(target.toString)
   }
 
-  /** Write `df` and its schema into a staging dir beside `target`, then
-    * rename it onto `target`. An incomplete `target` is removed first. If
-    * another writer publishes `target` first, the rename fails and its
-    * view is kept.
+  /** Publish `df` and its schema at `target` ([[graft.Scratch.publish]]:
+    * staging dir + atomic rename; a racing writer's view is kept).
     */
-  private def publish(df: DataFrame, target: java.nio.file.Path): Unit = {
-    val staging = target.resolveSibling(
-      s"_${target.getFileName}-${java.util.UUID.randomUUID()}")
-    try {
+  private def publish(df: DataFrame, target: java.nio.file.Path): Unit =
+    Scratch.publish(target, published) { staging =>
       df.write.parquet(staging.toString)
       Files.writeString(staging.resolve(SchemaFile), df.schema.json)
-      if (!published(target)) Streams.rmTree(target.toFile)
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case _: FileSystemException if published(target) =>
-    } finally Streams.rmTree(staging.toFile)
-  }
+    }
 
   /** What a REPL session keeps between queries. Each input list's cache
     * dir is re-hashed only when a file's path, size, mtime or file key

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Scratch, Tables}
 import graft.dsq.{DsqOptions, Engine, Flatten, Readers}
 import graft.streaming.Streams
 
@@ -107,7 +107,7 @@ object Formats {
       """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
         |  CAST(n_regionkey AS BIGINT) AS n_regionkey
         |FROM nation""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("nation_csv")
+      val out = Scratch.dir(s, "nation_csv")
       t(s, dir, "nation").coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(out)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
@@ -119,7 +119,7 @@ object Formats {
     QueryDef("f02_tsv_roundtrip",
       """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
         |FROM region""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("region_tsv")
+      val out = Scratch.dir(s, "region_tsv")
       t(s, dir, "region").coalesce(1).write.mode("overwrite")
         .option("header", "true").option("sep", "\t").csv(out)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
@@ -132,7 +132,7 @@ object Formats {
       """SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS s_nationkey,
         |  s_acctbal
         |FROM supplier""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("supplier_jsonl")
+      val out = Scratch.dir(s, "supplier_jsonl")
       t(s, dir, "supplier").coalesce(1).write.mode("overwrite").json(out)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(s.read.json(out))
@@ -144,7 +144,7 @@ object Formats {
       """SELECT c_custkey AS id, c_name AS "info.name",
         |  c_mktsegment AS "info.seg"
         |FROM customer""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("customer_nested")
+      val out = Scratch.dir(s, "customer_nested")
       t(s, dir, "customer")
         .select(col("c_custkey").as("id"),
           struct(col("c_name").as("name"), col("c_mktsegment").as("seg"))
@@ -160,7 +160,7 @@ object Formats {
       """SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
         |  CAST(user_id AS BIGINT) AS user_id
         |FROM events WHERE event_type = 'signup'""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("events_logfmt")
+      val out = Scratch.dir(s, "events_logfmt")
       t(s, dir, "events").filter(col("event_type") === "signup")
         .select(concat(
           lit("event_id="), col("event_id"),
@@ -188,7 +188,7 @@ object Formats {
         .select(to_json(struct(col("n_nationkey"), col("n_name"),
           col("n_regionkey"))))
         .collect().map(_.getString(0))
-      val file = writeFile(Streams.scratch("nation_cjson") + "/nation.cjson",
+      val file = writeFile(Scratch.dir(s, "nation_cjson") + "/nation.cjson",
         rows.mkString("")) // concatenated {}{}{} — no separators
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(Readers.cjson(s, file))
@@ -199,7 +199,7 @@ object Formats {
     QueryDef("f10_orc_roundtrip",
       """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
         |FROM region""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("region_orc")
+      val out = Scratch.dir(s, "region_orc")
       t(s, dir, "region").select("r_regionkey", "r_name")
         .coalesce(1).write.mode("overwrite").orc(out)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
@@ -217,7 +217,7 @@ object Formats {
         r.getAs[Number]("n_nationkey").longValue(),
         r.getAs[String]("n_name"),
         r.getAs[Number]("n_regionkey").longValue()))
-      val file = writeAvroNation(Streams.scratch("nation_avro") + "/nation.avro",
+      val file = writeAvroNation(Scratch.dir(s, "nation_avro") + "/nation.avro",
         rows.toSeq)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(Readers.avro(s, file))
@@ -237,7 +237,7 @@ object Formats {
           m.put("r_name", r.getAs[String]("r_name"))
           m: Object
         }.toList.asJava
-      val file = writeFile(Streams.scratch("region_yaml") + "/region.yaml",
+      val file = writeFile(Scratch.dir(s, "region_yaml") + "/region.yaml",
         new org.yaml.snakeyaml.Yaml().dump(items))
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten(Readers.yaml(s, file)).select("r_regionkey", "r_name")
@@ -252,7 +252,7 @@ object Formats {
         r.getAs[Number]("n_nationkey").longValue().toString,
         r.getAs[String]("n_name"),
         r.getAs[Number]("n_regionkey").longValue().toString)).toSeq
-      val file = writeXlsx(Streams.scratch("nation_xlsx") + "/nation.xlsx",
+      val file = writeXlsx(Scratch.dir(s, "nation_xlsx") + "/nation.xlsx",
         Seq("n_nationkey", "n_name", "n_regionkey") +: data)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten.convertNumbers(Flatten(Readers.read(s, file, "xlsx")))
@@ -266,7 +266,7 @@ object Formats {
       val data = t(s, dir, "region").collect().map(r => Seq(
         r.getAs[Number]("r_regionkey").longValue().toString,
         r.getAs[String]("r_name"))).toSeq
-      val file = writeOds(Streams.scratch("region_ods") + "/region.ods",
+      val file = writeOds(Scratch.dir(s, "region_ods") + "/region.ods",
         Seq("r_regionkey", "r_name") +: data)
       Streams.withConf(s, "spark.sql.ansi.enabled", "false") {
         Flatten.convertNumbers(Flatten(Readers.read(s, file, "ods")))
@@ -279,7 +279,7 @@ object Formats {
     QueryDef("f06_dsq_dialect",
       """SELECT n_name || '-x' AS tagged FROM nation
         |WHERE regexp_matches(n_name, '^NATION_1[0-9]$')""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("nation_dsq_csv")
+      val out = Scratch.dir(s, "nation_dsq_csv")
       t(s, dir, "nation").coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(out)
       val file = new java.io.File(out).listFiles()
@@ -301,7 +301,7 @@ object Formats {
       """SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
         |  CAST(user_id AS BIGINT) AS user_id
         |FROM events WHERE event_type = 'click'""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("events_logfmt_v2")
+      val out = Scratch.dir(s, "events_logfmt_v2")
       t(s, dir, "events").filter(col("event_type") === "click")
         .select(concat(
           lit("event_id="), col("event_id"),
@@ -351,7 +351,7 @@ object Formats {
         |  CASE WHEN event_id % 7 = 0 THEN NULL
         |    ELSE CAST(event_id AS BIGINT) END AS body_bytes
         |FROM events WHERE event_id % 3 = 0""".stripMargin) { (s, dir) =>
-      val out = Streams.scratch("events_accesslog_v2")
+      val out = Scratch.dir(s, "events_accesslog_v2")
       t(s, dir, "events")
         .select(concat(
           lit("10.0.0."), col("user_id"),

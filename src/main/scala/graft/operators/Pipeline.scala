@@ -57,29 +57,23 @@ object Pipeline {
   }
 
   /** Near-dup pair graph + converged component labels for the planted
-    * corpus, computed ONCE per (session, dir) and fanned out to every
-    * consumer — p25 (components), p38 (representatives), p51 (split).
-    * The r5-advice sharing form: a production DAG materializes the pair
-    * table and its closure once; re-deriving them per consumer re-paid
-    * the minhash + banding + verify + propagation cost three times in
-    * the same JVM. Safe because both tables are barrier-backed (or
-    * exact-stats local relations on the driver union-find path) and the
-    * inputs are immutable test corpora; the memo holds one entry per
-    * corpus dir, not per query.
+    * corpus, computed ONCE per (session, dir) in the current
+    * [[graft.Scratch]] scope and fanned out to every consumer — p25
+    * (components), p38 (representatives), p51 (split). The r5-advice
+    * sharing form: a production DAG materializes the pair table and its
+    * closure once; re-deriving them per consumer re-paid the minhash +
+    * banding + verify + propagation cost three times in the same JVM.
+    * Both tables are barrier-backed (or exact-stats local relations on
+    * the driver union-find path); the memo lives in the scope that holds
+    * those barriers, so it can never outlive them.
     */
-  private val nearDupMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame)]()
-  // the pair table is barrier-backed: when the re-timing loops release
-  // all barriers between runs, this memo MUST drop with them or the
-  // next consumer re-reads a deleted dir (the r11 p25 bench failure)
-  Dedup.onBarrierReset(() => nearDupMemo.clear())
   private def nearDupGraph(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    nearDupMemo.computeIfAbsent(s"${System.identityHashCode(s)}|$dir", _ => {
+    graft.Scratch.current(s).memo(("nearDupGraph", s, dir)) {
       val pairs = Dedup.minhashPairs(docsWithPlants(s, dir), "doc_id",
         "text", k = 64, bands = 16, threshold = 0.5)
       (pairs, Dedup.components(pairs))
-    })
+    }
 
   /** embeddings ∪ slightly-scaled copies (cosine with original ≈ 1). */
   private def vecsWithPlants(s: SparkSession, dir: String): DataFrame = {
@@ -1273,11 +1267,11 @@ object Pipeline {
       // the 1-row summary comes from the barrier's parquet FOOTERS —
       // row count + int64 d min/max — zero extra jobs at any scale
       // (agg-job fallback if a writer ever omits column stats)
-      val n = graft.pipeline.Dedup.barrierRowCount(dir)
+      val n = graft.pipeline.Dedup.barrierRowCount(f1.sparkSession, dir)
       if (n == 0L) {
         // zero converting users: reclaim the empty barrier now and
         // emit the oracle-matching NULL row
-        graft.pipeline.Dedup.releaseBarrier(dir)
+        graft.Scratch.release(dir)
         val z = lit(null).cast("long")
         f1.sparkSession.range(1)
           .select(lit(s"$s1>$s2").as("step_pair"), lit(0L).as("n_users"),
@@ -1285,7 +1279,7 @@ object Pipeline {
             z.as("max_us"))
       } else {
         val (minUs, maxUs) = graft.pipeline.Dedup
-          .barrierColumnMinMaxLong(dir, "d")
+          .barrierColumnMinMaxLong(f1.sparkSession, dir, "d")
           .getOrElse {
             val r = f1.sparkSession.read.parquet(dir.toString)
               .agg(min("d").cast("long"), max("d").cast("long")).head()
@@ -1313,7 +1307,7 @@ object Pipeline {
     // construction in bench loops accumulated the dirs), mirroring the
     // zero-conversion reclaim above.
     anchorsAt.foreach { case (_, d) =>
-      graft.pipeline.Dedup.releaseBarrier(d) }
+      graft.Scratch.release(d) }
     out
   }
 
@@ -3887,10 +3881,7 @@ object Pipeline {
       // content-hash INDEX maintained by DedupIndex (x14), so the
       // single corpus-side pass reads ~36 B/doc of index instead of
       // re-hashing the document text on every ingest
-      val idxDir = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft_fmt", "p36_index").toString
-      graft.pipeline.DedupIndex.drop(s, idxDir)
+      val idxDir = graft.Scratch.dir(s, "p36_index")
       graft.pipeline.DedupIndex.append(s, idxDir, corpus, "doc_id", "text")
       Dedup.incrementalDupFlagsAgainst(batch,
         graft.pipeline.DedupIndex.read(s, idxDir).select("h"),

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
-import graft.streaming.Streams
+import graft.{QueryDef, Scratch, Tables}
+import scala.jdk.CollectionConverters._
 
 /** Scale-pattern demonstrations under the oracle gate: each runs a
   * physical-design technique (bucketing, salting) whose *result* is
@@ -22,22 +22,7 @@ object Scale {
     * property on this plan.
     */
   private[graft] def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    // drop catalog entries AND leftover warehouse dirs (the in-memory
-    // catalog forgets tables across JVMs; the directory persists and
-    // saveAsTable then fails with LOCATION_ALREADY_EXISTS)
-    Seq("x01_orders_b", "x01_lineitem_b").foreach { tb =>
-      s.sql(s"DROP TABLE IF EXISTS $tb")
-      val wh = java.net.URI.create(
-        s.conf.get("spark.sql.warehouse.dir")).getPath
-      val dirF = new java.io.File(wh, tb)
-      if (dirF.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(dirF)
-      }
-    }
+    Seq("x01_orders_b", "x01_lineitem_b").foreach(resetBucketTable(s, _))
     t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
       .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .mode("overwrite").saveAsTable("x01_orders_b")
@@ -56,19 +41,12 @@ object Scale {
   /** Drops a saved bucketed table from the in-memory catalog AND removes
     * its leftover warehouse directory (the catalog forgets tables across
     * JVMs; the directory persists and saveAsTable then fails with
-    * LOCATION_ALREADY_EXISTS). Same hygiene [[bucketedJoin]] does inline.
+    * LOCATION_ALREADY_EXISTS).
     */
   private def resetBucketTable(s: SparkSession, tb: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $tb")
-    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-    val dirF = new java.io.File(wh, tb)
-    if (dirF.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dirF)
-    }
+    Scratch.rmTree(new java.io.File(
+      java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath, tb))
   }
 
   /** Bucket pruning (point lookup on a bucketed table): customer is
@@ -140,9 +118,7 @@ object Scale {
     */
   private[graft] def partitionPrunedAgg(s: SparkSession,
       dir: String): DataFrame = {
-    val out = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x05_events_parted").toString
+    val out = Scratch.dir(s, "x05_events_parted")
     t(s, dir, "events")
       .select(col("event_type"), col("value"))
       .write.partitionBy("event_type").mode("overwrite").parquet(out)
@@ -166,9 +142,7 @@ object Scale {
     */
   private[graft] def dppPrunedJoin(s: SparkSession,
       dir: String): DataFrame = {
-    val out = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x07_events_parted").toString
+    val out = Scratch.dir(s, "x07_events_parted")
     t(s, dir, "events")
       .select(col("event_type"), col("value"))
       .write.partitionBy("event_type").mode("overwrite").parquet(out)
@@ -212,9 +186,7 @@ object Scale {
     */
   private[graft] def schemaEvolvedRead(s: SparkSession,
       dir: String): DataFrame = {
-    val out = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x08_docs_evolved").toString
+    val out = Scratch.dir(s, "x08_docs_evolved")
     val d = t(s, dir, "documents")
     d.filter(col("doc_id") < 250).select("doc_id", "text")
       .write.mode("overwrite").parquet(s"$out/batch=0")
@@ -236,9 +208,7 @@ object Scale {
     */
   private[graft] def compactedStats(s: SparkSession,
       dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x09_compact").toString
+    val base = Scratch.dir(s, "x09_compact")
     val frag = s"$base/fragmented"
     val comp = s"$base/compacted"
     t(s, dir, "documents").repartition(64)
@@ -278,9 +248,7 @@ object Scale {
     */
   private[graft] def parquetBloomStats(s: SparkSession,
       dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x16_bloom").toString
+    val base = Scratch.dir(s, "x16_bloom")
     t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
       .repartition(4)
       .write.mode("overwrite")
@@ -293,26 +261,18 @@ object Scale {
       // dictionary and the bloom is the only row-group skip.
       .option("parquet.enable.dictionary#o_custkey", "false")
       .parquet(base)
-    val conf = s.sessionState.newHadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(base)
-    val fs = dirPath.getFileSystem(conf)
-    var bloomOnKey = true
-    var bloomElsewhere = false
-    var chunksChecked = 0
-    fs.listStatus(dirPath)
-      .filter(_.getPath.getName.endsWith(".parquet")).foreach { st =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try rdr.getFooter.getBlocks.forEach { bg =>
-        bg.getColumns.forEach { cc =>
-          val hasBloom = cc.getBloomFilterOffset >= 0
-          if (cc.getPath.toDotString == "o_custkey") {
-            chunksChecked += 1
-            if (!hasBloom) bloomOnKey = false
-          } else if (hasBloom) bloomElsewhere = true
-        }
-      } finally rdr.close()
+    // (o_custkey chunks, all of them with a bloom, a bloom elsewhere)
+    val perFile = graft.pipeline.Dedup.parquetFooters(s,
+        new org.apache.hadoop.fs.Path(base)) { rdr =>
+      val chunks = rdr.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala)
+      val (key, other) = chunks.partition(_.getPath.toDotString == "o_custkey")
+      (key.size, key.forall(_.getBloomFilterOffset >= 0),
+        other.exists(_.getBloomFilterOffset >= 0))
     }
+    val chunksChecked = perFile.map(_._1).sum
+    val bloomOnKey = perFile.forall(_._2)
+    val bloomElsewhere = perFile.exists(_._3)
     val df = s.read.parquet(base)
     // bounded 1-value driver agg picks the probe key (broadcast-variable
     // pattern, like the IVF centroids)
@@ -339,10 +299,8 @@ object Scale {
     */
   private[graft] def columnIndexStats(s: SparkSession,
       dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val naiveP = s"$root/x17_naive"
-    val sortedP = s"$root/x17_sorted"
+    val naiveP = Scratch.dir(s, "x17_naive")
+    val sortedP = Scratch.dir(s, "x17_sorted")
     val orders = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
     def write(df: DataFrame, path: String): Unit =
       df.write.mode("overwrite")
@@ -357,40 +315,26 @@ object Scale {
     val (lo0, hi0) = (mm.getLong(0), mm.getLong(1))
     val lo = lo0 + (hi0 - lo0) * 45 / 100
     val hi = lo0 + (hi0 - lo0) * 50 / 100
-    val conf = s.sessionState.newHadoopConf()
     // (pages touched by [lo,hi], total pages, index present in all chunks)
     def probe(path: String): (Int, Int, Boolean) = {
-      val dp = new org.apache.hadoop.fs.Path(path)
-      val fs = dp.getFileSystem(conf)
-      var touched = 0; var total = 0; var present = true
-      fs.listStatus(dp)
-        .filter(_.getPath.getName.endsWith(".parquet")).foreach { st =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try rdr.getFooter.getBlocks.forEach { bg =>
-          bg.getColumns.forEach { cc =>
-            if (cc.getPath.toDotString == "o_orderkey") {
-              val ci = rdr.readColumnIndex(cc)
-              if (ci == null) present = false
-              else {
-                val mins = ci.getMinValues; val maxs = ci.getMaxValues
-                val nullPages = ci.getNullPages
-                (0 until mins.size()).foreach { i =>
-                  if (!nullPages.get(i)) {
-                    // INT64 min/max are plain-encoded little-endian
-                    def long(b: java.nio.ByteBuffer): Long = b.duplicate()
-                      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-                    total += 1
-                    if (long(mins.get(i)) <= hi && long(maxs.get(i)) >= lo)
-                      touched += 1
-                  }
-                }
-              }
-            }
-          }
-        } finally rdr.close()
-      }
-      (touched, total, present)
+      // INT64 min/max are plain-encoded little-endian
+      def long(b: java.nio.ByteBuffer): Long = b.duplicate()
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
+      val perChunk = graft.pipeline.Dedup.parquetFooters(s,
+          new org.apache.hadoop.fs.Path(path)) { rdr =>
+        rdr.getFooter.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == "o_orderkey")
+          .map(cc => Option(rdr.readColumnIndex(cc)).map { ci =>
+            val (mins, maxs) = (ci.getMinValues, ci.getMaxValues)
+            val pages = (0 until mins.size())
+              .filterNot(i => ci.getNullPages.get(i))
+            (pages.count(i =>
+              long(mins.get(i)) <= hi && long(maxs.get(i)) >= lo), pages.size)
+          })
+      }.flatten
+      (perChunk.flatten.map(_._1).sum, perChunk.flatten.map(_._2).sum,
+        perChunk.forall(_.isDefined))
     }
     val (tSorted, _, pSorted) = probe(sortedP)
     val (tNaive, nNaive, pNaive) = probe(naiveP)
@@ -423,9 +367,7 @@ object Scale {
     */
   private[graft] def rebalanceWrite(s: SparkSession,
       dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x20_rebalance").toString
+    val base = Scratch.dir(s, "x20_rebalance")
     val events = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 10 < 9, lit("hot"))
@@ -518,11 +460,8 @@ object Scale {
     * written batch itself — exactly what s17 does in its foreachBatch.
     */
   private[graft] def incrementalScan(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val dataP = s"$root/x22_data"
-    val maniP = s"$root/x22_manifest"
-    Streams.rmTree(new java.io.File(dataP)); Streams.rmTree(new java.io.File(maniP))
+    val dataP = Scratch.dir(s, "x22_data")
+    val maniP = Scratch.dir(s, "x22_manifest")
     val events = t(s, dir, "events").select("event_id", "user_id")
     // snapshot 1: the 80% residue classes, 12 range files
     events.filter(col("event_id") % 5 =!= 0)
@@ -718,11 +657,8 @@ object Scale {
     * merge and pins ≤3 of 16 files rewritten.
     */
   private[graft] def mergeCow(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val dataP = s"$root/x40_target"
-    val deltaP = s"$root/x40_delta"
-    Streams.rmTree(new java.io.File(dataP)); Streams.rmTree(new java.io.File(deltaP))
+    val dataP = Scratch.dir(s, "x40_target")
+    val deltaP = Scratch.dir(s, "x40_delta")
     val events = t(s, dir, "events").select("event_id", "user_id")
     events.repartitionByRange(16, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -799,10 +735,8 @@ object Scale {
   }
 
   private[graft] def manifestPrune(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val dataP = s"$root/x21_data"
-    val maniP = s"$root/x21_manifest"
+    val dataP = Scratch.dir(s, "x21_data")
+    val maniP = Scratch.dir(s, "x21_manifest")
     val events = t(s, dir, "events").select("event_id", "user_id", "value")
     events.repartitionByRange(16, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -857,10 +791,8 @@ object Scale {
     */
   private[graft] def manifestNdvSketch(s: SparkSession,
       dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val dataP = s"$root/x26_data"
-    val maniP = s"$root/x26_manifest"
+    val dataP = Scratch.dir(s, "x26_data")
+    val maniP = Scratch.dir(s, "x26_manifest")
     val events = t(s, dir, "events").select("event_id", "user_id", "value")
     events.repartitionByRange(16, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -915,9 +847,7 @@ object Scale {
     */
   private[graft] def trainingOrderLayout(s: SparkSession,
       dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val dataP = s"$root/x28_order"
+    val dataP = Scratch.dir(s, "x28_order")
     val docs = t(s, dir, "documents").select("doc_id")
       .withColumn("ok",
         md5(concat(lit("shuf42:"), col("doc_id").cast("string"))))
@@ -957,9 +887,7 @@ object Scale {
 
   private[graft] def dynamicPartitionOverwrite(s: SparkSession,
       dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x18_dpo").toString
+    val base = Scratch.dir(s, "x18_dpo")
     val events = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("value"),
         to_date(col("ts")).cast("string").as("day"))
@@ -1097,10 +1025,8 @@ object Scale {
       .select(col("event_id"), col("user_id"), dayofmonth(col("ts")).as("day"))
     val z = ev.withColumn("z",
       zOrderValue(col("user_id"), col("day"), bits = 11))
-    val base = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val naiveDir = s"$base/x12_naive"
-    val zDir = s"$base/x12_zorder"
+    val naiveDir = Scratch.dir(s, "x12_naive")
+    val zDir = Scratch.dir(s, "x12_zorder")
     z.repartition(16).write.mode("overwrite").parquet(naiveDir)
     z.repartitionByRange(16, col("z")).sortWithinPartitions("z")
       .write.mode("overwrite").parquet(zDir)
@@ -1145,9 +1071,7 @@ object Scale {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val (cents, cbs) = Similarity.ivfPqTrain(corpus, 16, 8, 16,
       "vec_id", "embedding")
-    val layoutDir = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x42_ivfpq_layout").toString
+    val layoutDir = Scratch.dir(s, "x42_ivfpq_layout")
     Similarity.ivfPqEncodeTable(corpus, cents, cbs, "vec_id", "embedding")
       .write.partitionBy("cell").mode("overwrite").parquet(layoutDir)
     (Similarity.ivfPqTopKFromCodes(s.read.parquet(layoutDir), corpus,
@@ -1165,9 +1089,7 @@ object Scale {
     val queries = corpus.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val cents = Similarity.ivfCentroids(corpus, 16, "vec_id", "embedding")
-    val layoutDir = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x13_ivf_layout").toString
+    val layoutDir = Scratch.dir(s, "x13_ivf_layout")
     corpus.withColumn("cell",
         Similarity.ivfProbeCells(cents, col("embedding"), 1)
           .getItem(0).getField("cid"))
@@ -1290,8 +1212,7 @@ object Scale {
   private[graft] def writeAuditPublish(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_x34_wap").toString
+    val base = Scratch.dir(s, "x34_wap")
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(s.sessionState.newHadoopConf())
     val src = t(s, dir, "documents").select("doc_id", "text")
@@ -1311,7 +1232,7 @@ object Scale {
       // nBuckets pinned: skips the derived-sizing count() (ADVICE r10)
       // — at audit scale the caller knows the layout it just wrote
       val staged = s.read.parquet(staging.toString)
-      val ok = graft.pipeline.Dedup.barrierRowCount(staging) == srcCount &&
+      val ok = graft.pipeline.Dedup.barrierRowCount(s, staging) == srcCount &&
         datasetFingerprint(staged, nBuckets = 64).head().getString(3) ==
           srcFp
       val visible = if (ok) fs.rename(staging, published)
@@ -1320,7 +1241,7 @@ object Scale {
     }
     val (okGood, visGood) = publish("good", corrupt = false)
     val (okBad, visBad) = publish("bad", corrupt = true)
-    val readBack = graft.pipeline.Dedup.barrierRowCount(
+    val readBack = graft.pipeline.Dedup.barrierRowCount(s,
       new org.apache.hadoop.fs.Path(s"$base/good"))
     Seq((srcCount, readBack, okGood, visGood, !okBad, !visBad,
       !fs.exists(new org.apache.hadoop.fs.Path(s"$base/bad")),
@@ -1348,8 +1269,7 @@ object Scale {
   private[graft] def orphanGcReport(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_x30_gc").toString
+    val base = Scratch.dir(s, "x30_gc")
     val data = s"$base/data"
     val src = t(s, dir, "lineitem")
       .filter(col("l_orderkey") % 4 === 0)
@@ -1414,10 +1334,7 @@ object Scale {
         |FROM all_rows a JOIN fb f ON a.h = f.h AND a.b = f.fb
         |GROUP BY a.h""".stripMargin) { (s, dir) =>
       import graft.pipeline.DedupIndex
-      val idxDir = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        "graft_fmt", "x14_index").toString
-      DedupIndex.drop(s, idxDir)
+      val idxDir = Scratch.dir(s, "x14_index")
       val d = t(s, dir, "documents").select("doc_id", "text")
       val b1 = d.filter(col("doc_id") < 250)
       val b2 = d.filter(col("doc_id") >= 250)
@@ -1443,9 +1360,7 @@ object Scale {
         |GROUP BY l_linestatus""".stripMargin) { (s, dir) =>
       aqeBroadcastConfs.foreach { case (k, v) => s.conf.set(k, v) }
       try {
-        val out = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          "graft_fmt", "x15_result").toString
+        val out = Scratch.dir(s, "x15_result")
         // materialize under the confs (the x01/x06 trick) so the plan
         // that runs is the one AQE promoted
         aqeBroadcastPromotedJoin(s, dir).write.mode("overwrite").parquet(out)
@@ -1463,9 +1378,7 @@ object Scale {
         |GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       bloomJoinConfs.foreach { case (k, v) => s.conf.set(k, v) }
       try {
-        val out = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          "graft_fmt", "x11_result").toString
+        val out = Scratch.dir(s, "x11_result")
         // materialize under the confs (the x01/x06 trick) so the plan
         // that runs carries the runtime filter
         bloomPrunedJoin(s, dir).write.mode("overwrite").parquet(out)
@@ -1547,9 +1460,7 @@ object Scale {
         "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
       confs.foreach { case (k, v) => s.conf.set(k, v) }
       try {
-        val out = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          "graft_fmt", "x06_result").toString
+        val out = Scratch.dir(s, "x06_result")
         // materialize under the skew confs (same trick as x01)
         aqeSkewJoin(s, dir).write.mode("overwrite").parquet(out)
         s.read.parquet(out)
@@ -1615,9 +1526,7 @@ object Scale {
         .stripMargin) { (s, dir) =>
       bucketScanConfs.foreach { case (k, v) => s.conf.set(k, v) }
       try {
-        val out = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          "graft_fmt", "x25_result").toString
+        val out = Scratch.dir(s, "x25_result")
         partitionBucketLookup(s, dir).write.mode("overwrite").parquet(out)
         s.read.parquet(out)
       } finally {
@@ -1633,9 +1542,7 @@ object Scale {
         try {
           // materialize while the conf holds so the executed plan is the
           // bucket-pruned scan (x01's materialize-under-confs pattern)
-          val out = java.nio.file.Paths.get(
-            sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-            "graft_fmt", "x19_result").toString
+          val out = Scratch.dir(s, "x19_result")
           bucketPrunedLookup(s, dir).write.mode("overwrite").parquet(out)
           s.read.parquet(out)
         } finally {
@@ -1817,9 +1724,7 @@ object Scale {
         // plan that runs is the bucket-aligned shuffle-free SMJ (a
         // caller-triggered action later would re-plan under restored
         // confs); then hand back the materialized result
-        val out = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          "graft_fmt", "x01_result").toString
+        val out = Scratch.dir(s, "x01_result")
         joined.write.mode("overwrite").parquet(out)
         s.read.parquet(out)
       } finally {
@@ -2240,9 +2145,7 @@ object Scale {
         val plan = df.queryExecution.executedPlan.toString
         require(plan.contains("IntervalJoin"),
           s"x37: plain SQL did not route to IntervalJoinExec:\n$plan")
-        val out = java.nio.file.Paths.get(
-          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-          "graft_fmt", "x37_result").toString
+        val out = Scratch.dir(s, "x37_result")
         df.write.mode("overwrite").parquet(out)
         s.read.parquet(out)
       } finally s.conf.unset(AutoIntervalJoinStrategy.ConfKey)
@@ -2611,11 +2514,8 @@ object Scale {
     */
   private[graft] def partitionEvolution(s: SparkSession,
       dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val p0 = s"$root/x43_spec0"
-    val p1 = s"$root/x43_spec1"
-    Seq(p0, p1).foreach(p => Streams.rmTree(new java.io.File(p)))
+    val p0 = Scratch.dir(s, "x43_spec0")
+    val p1 = Scratch.dir(s, "x43_spec1")
     val e = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"))
@@ -2679,12 +2579,9 @@ object Scale {
 
   /** x41 runner — see the QueryDef comment for the contract. */
   private[graft] def timeTravel(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val dataP = s"$root/x41_base"
-    val appendP = s"$root/x41_append"
-    val deltaP = s"$root/x41_delta"
-    Seq(dataP, appendP, deltaP).foreach(p => Streams.rmTree(new java.io.File(p)))
+    val dataP = Scratch.dir(s, "x41_base")
+    val appendP = Scratch.dir(s, "x41_append")
+    val deltaP = Scratch.dir(s, "x41_delta")
     val events = t(s, dir, "events").select("event_id", "user_id")
     events.repartitionByRange(8, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -2750,11 +2647,8 @@ object Scale {
     */
   private[graft] def deletionVectors(s: SparkSession,
       dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val baseP = s"$root/x45_base"
-    val dvP = s"$root/x45_dv"
-    Seq(baseP, dvP).foreach(p => Streams.rmTree(new java.io.File(p)))
+    val baseP = Scratch.dir(s, "x45_base")
+    val dvP = Scratch.dir(s, "x45_dv")
     val events = t(s, dir, "events").select("event_id", "user_id")
     events.repartitionByRange(8, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -2841,10 +2735,7 @@ object Scale {
     */
   private[graft] def incrementalView(s: SparkSession,
       dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val viewP = s"$root/x46_view"
-    Streams.rmTree(new java.io.File(viewP))
+    val viewP = Scratch.dir(s, "x46_view")
     val events = t(s, dir, "events")
       .select("event_id", "user_id", "event_type")
     // the two CDC commits: inserts are re-keyed copies (offset clears
@@ -2900,13 +2791,10 @@ object Scale {
     * same counting-algorithm maintenance as x46.
     */
   private[graft] def cdcRead(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt").toString
-    val baseP = s"$root/x47_base"
-    val appP = s"$root/x47_append"
-    val dvP = s"$root/x47_dv"
-    val viewP = s"$root/x47_view"
-    Seq(baseP, appP, dvP, viewP).foreach(p => Streams.rmTree(new java.io.File(p)))
+    val baseP = Scratch.dir(s, "x47_base")
+    val appP = Scratch.dir(s, "x47_append")
+    val dvP = Scratch.dir(s, "x47_dv")
+    val viewP = Scratch.dir(s, "x47_view")
     val events = t(s, dir, "events")
       .select("event_id", "user_id", "event_type")
     events.repartitionByRange(8, col("event_id"))
@@ -2950,7 +2838,7 @@ object Scale {
     // one base row per (file, pos) sidecar entry — positions were
     // derived from the base, so |delta2| == |sidecar| by construction
     def footerCount(p: String): Long = graft.pipeline.Dedup
-      .barrierRowCount(new org.apache.hadoop.fs.Path(p))
+      .barrierRowCount(s, new org.apache.hadoop.fs.Path(p))
     ivmVersionRows("cdc_equals_recompute",
       Seq((v0, 0, 0L, true), (v1, 1, footerCount(appP), eq1),
         (v2, 2, footerCount(dvP), eq2)))

@@ -1,15 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.QueryDef
+import graft.{QueryDef, Scratch}
 import graft.streaming.Streams
-import graft.streaming.Streams.{rmTree, writeSingle, writeSplitSingle}
+import graft.Scratch.rmTree
+import graft.streaming.Streams.{writeSingle, writeSplitSingle}
 
 /** Structured Streaming queries under the driver gate: each executes a
   * real streaming job whose final state must equal the batch oracle.
   * The event-stream gates run AvailableNow into a memory sink
   * (`Streams.runToMemory`); the rest stage their input as single-file
-  * parquet batches under `Streams.scratch` and replay them through
+  * parquet batches under a `Scratch.dirs` dir and replay them through
   * `Streams.replay`, so each keeps only its staging, its per-batch
   * body and its publish-time readout.
   */
@@ -183,7 +184,7 @@ object Streaming {
         |FROM all_rows GROUP BY 1""".stripMargin) { (s, dir) =>
       import graft.pipeline.DedupIndex
       val d = graft.Tables.load(s, dir, "documents").select("doc_id", "text")
-      val Seq(srcDir, idxDir) = Streams.scratchDirs(
+      val Seq(srcDir, idxDir) = Scratch.dirs(s,
         "s09_stream_src", "s09_index")
       writeSingle(d.filter(col("doc_id") < 250)
         .unionAll(d.filter(col("doc_id") < 50 && col("doc_id") % 10 === 0)
@@ -220,7 +221,7 @@ object Streaming {
          |FROM (${Pipeline.minhashPairsSql}) q""".stripMargin) { (s, dir) =>
       import graft.pipeline.Dedup
       val d = graft.Tables.load(s, dir, "documents").select("doc_id", "text")
-      val Seq(srcDir, sigDir) = Streams.scratchDirs(
+      val Seq(srcDir, sigDir) = Scratch.dirs(s,
         "s10_stream_src", "s10_sigs")
       writeSingle(d.filter(col("doc_id") < 250), srcDir, "batch_a")
       writeSingle(d.filter(col("doc_id") >= 250)
@@ -254,7 +255,7 @@ object Streaming {
         .select("vec_id", "embedding")
       val cents = Clustering.kmeansCentroids(e, k = 10, iters = 2,
         "vec_id", "embedding")
-      val Seq(srcDir) = Streams.scratchDirs("s11_stream_src")
+      val Seq(srcDir) = Scratch.dirs(s, "s11_stream_src")
       writeSingle(e.filter(col("vec_id") < 250), srcDir, "batch_a")
       writeSingle(e.filter(col("vec_id") >= 250), srcDir, "batch_b")
       Streams.runToMemory(s,
@@ -277,7 +278,7 @@ object Streaming {
         .select((col("doc_id") + 3000000L).as("doc_id"),
           concat(col("text"), lit("\n"), col("text")).as("text"),
           col("lang"))
-      val Seq(srcDir) = Streams.scratchDirs("s12_stream_src")
+      val Seq(srcDir) = Scratch.dirs(s, "s12_stream_src")
       writeSingle(docs, srcDir, "batch_a")
       writeSingle(planted, srcDir, "batch_b")
       Streams.runToMemory(s,
@@ -299,7 +300,7 @@ object Streaming {
         .select("doc_id", "text")
       val bench = docs.filter(col("doc_id") % 50 === 7)
       val train = docs.filter(col("doc_id") % 50 =!= 7)
-      val Seq(srcDir, outDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir) = Scratch.dirs(s,
         "s15_stream_src", "s15_scrubbed")
       writeSingle(train.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(train.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
@@ -332,7 +333,7 @@ object Streaming {
         .select(col("doc_id").as("qid"),
           concat_ws(" ", slice(graft.pipeline.TextAnalysis.tokens(
             lower(col("text"))), 1, 30)).as("qtext"))
-      val Seq(srcDir, outDir, statsDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir, statsDir) = Scratch.dirs(s,
         "s16_stream_src", "s16_routed", "s16_stats")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
@@ -371,7 +372,7 @@ object Streaming {
         |FROM events""".stripMargin) { (s, dir) =>
       val events = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id")
-      val Seq(srcDir, maniDir) = Streams.scratchDirs(
+      val Seq(srcDir, maniDir) = Scratch.dirs(s,
         "s17_stream_src", "s17_manifest")
       events.repartitionByRange(8, col("event_id"))
         .sortWithinPartitions("event_id")
@@ -424,7 +425,7 @@ object Streaming {
       val queries = corpus.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val cents = Similarity.ivfCentroids(corpus, 16, "vec_id", "embedding")
-      val Seq(srcDir, layoutDir) = Streams.scratchDirs(
+      val Seq(srcDir, layoutDir) = Scratch.dirs(s,
         "s18_stream_src", "s18_ivf_layout")
       writeSingle(corpus.filter(col("vec_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(corpus.filter(col("vec_id") % 2 === 1), srcDir, "batch_b")
@@ -487,7 +488,7 @@ object Streaming {
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val Seq(srcDir, vocabDir, statsDir) = Streams.scratchDirs(
+      val Seq(srcDir, vocabDir, statsDir) = Scratch.dirs(s,
         "s19_stream_src", "s19_vocab", "s19_stats")
       writeSplitSingle(docs,
         expr(s"CAST(doc_id AS BIGINT) * 4 div ${maxId + 1}"), 4, srcDir)
@@ -595,7 +596,7 @@ object Streaming {
         .select("doc_id", "text")
       val stats = TextAnalysis.backoffStatsMaterialized(
         docs.filter(col("doc_id") % 2 === 0))
-      val Seq(srcDir, outDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir) = Scratch.dirs(s,
         "s20_stream_src", "s20_scored")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
@@ -623,7 +624,7 @@ object Streaming {
         val docs = graft.operators.Pipeline.urlPlanted(
           graft.Tables.load(s, dir, "documents").select("doc_id", "text"))
         val maxId = docs.agg(max("doc_id")).head().getLong(0)
-        val Seq(srcDir, storeBase) = Streams.scratchDirs(
+        val Seq(srcDir, storeBase) = Scratch.dirs(s,
           "s21_stream_src", "s21_url_store")
         writeSplitSingle(docs,
           expr(s"CAST(doc_id AS BIGINT) * 4 div ${maxId + 1}"), 4, srcDir)
@@ -661,7 +662,7 @@ object Streaming {
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "lang", "source")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val Seq(srcDir, storeDir) = Streams.scratchDirs(
+      val Seq(srcDir, storeDir) = Scratch.dirs(s,
         "s22_stream_src", "s22_sketch_store")
       writeSplitSingle(docs,
         expr(s"CAST(doc_id AS BIGINT) * 4 div ${maxId + 1}"), 4, srcDir)
@@ -725,7 +726,7 @@ object Streaming {
       val delta = Corpus.snapshotDiff(v1, v2)
         .filter(col("status") =!= "unchanged")
         .join(v2, Seq("doc_id"), "left")
-      val Seq(srcDir, storeRoot) = Streams.scratchDirs(
+      val Seq(srcDir, storeRoot) = Scratch.dirs(s,
         "s13_stream_src", "s13_store")
       writeSingle(delta.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(delta.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
@@ -781,7 +782,7 @@ object Streaming {
       import graft.pipeline.Corpus
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
-      val Seq(srcDir, outDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir) = Scratch.dirs(s,
         "s14_stream_src", "s14_psi_out")
       writeSingle(docs.filter(col("doc_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 2 === 1), srcDir, "batch_b")
@@ -854,7 +855,7 @@ object Streaming {
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,3))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      val root = java.nio.file.Files.createTempDirectory("graft_s24")
+      val root = Scratch.dir(s, "s24")
       val src = s"$root/in"
       new java.io.File(src).mkdirs()
       val ckpt = s"$root/ckpt"
@@ -909,7 +910,7 @@ object Streaming {
         .select("vec_id", "embedding")
       val evalSet = e.filter(col("vec_id") % 50 === 3)
         .select(col("vec_id").as("eval_id"), col("embedding").as("evec"))
-      val Seq(srcDir, outDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir) = Scratch.dirs(s,
         "s25_stream_src", "s25_stream_out")
       writeSingle(e.filter(col("vec_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(e.filter(col("vec_id") % 2 === 1), srcDir, "batch_b")
@@ -929,7 +930,7 @@ object Streaming {
     QueryDef("s26_stream_write_audit_publish",
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
         |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      val Seq(srcDir, pubDir) = Streams.scratchDirs(
+      val Seq(srcDir, pubDir) = Scratch.dirs(s,
         "s26_stream_src", "s26_published")
       new java.io.File(pubDir).mkdirs()
       val ev = graft.Tables.load(s, dir, "events")
@@ -960,7 +961,7 @@ object Streaming {
     QueryDef("s27_stream_chunk_index", Pipeline.sentenceChunksSql) {
       (s, dir) =>
       import graft.pipeline.Corpus
-      val Seq(srcDir, outDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir) = Scratch.dirs(s,
         "s27_stream_src", "s27_stream_out")
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
@@ -1006,7 +1007,7 @@ object Streaming {
           col("purchase_value"))
       val clicks = ev.filter(col("event_type") === "click")
         .select("user_id", "event_id", "ts")
-      val Seq(srcDir, outDir) = Streams.scratchDirs(
+      val Seq(srcDir, outDir) = Scratch.dirs(s,
         "s28_stream_src", "s28_enriched")
       writeSingle(clicks.filter(col("event_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(clicks.filter(col("event_id") % 2 === 1), srcDir, "batch_b")
@@ -1042,7 +1043,7 @@ object Streaming {
       val queries = corpus.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val cbs = Similarity.pqCodebooks(corpus, 8, 16, "vec_id", "embedding")
-      val Seq(srcDir, idxDir) = Streams.scratchDirs(
+      val Seq(srcDir, idxDir) = Scratch.dirs(s,
         "s29_stream_src", "s29_pq_codes")
       writeSingle(corpus.filter(col("vec_id") % 2 === 0), srcDir, "batch_a")
       writeSingle(corpus.filter(col("vec_id") % 2 === 1), srcDir, "batch_b")
@@ -1091,7 +1092,7 @@ object Streaming {
       import graft.pipeline.Corpus
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "n_chars")
-      val Seq(srcDir, resDir) = Streams.scratchDirs(
+      val Seq(srcDir, resDir) = Scratch.dirs(s,
         "s30_stream_src", "s30_reservoir")
       writeSingle(docs.filter(col("doc_id") % 3 === 0), srcDir, "batch_a")
       writeSingle(docs.filter(col("doc_id") % 3 === 1), srcDir, "batch_b")
@@ -1134,7 +1135,7 @@ object Streaming {
         |) ORDER BY check_name""".stripMargin) { (s, dir) =>
       val orders = graft.Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val Seq(srcDir, statsDir, keysDir) = Streams.scratchDirs(
+      val Seq(srcDir, statsDir, keysDir) = Scratch.dirs(s,
         "s31_stream_src", "s31_stats", "s31_keys")
       writeSplitSingle(orders, col("o_orderkey") % 4, 4,
         srcDir)
@@ -1225,7 +1226,7 @@ object Streaming {
         .select(col("event_type").as("series"),
           expr("unix_micros(ts) div 3600000000").as("hr"),
           col("event_id"))
-      val Seq(srcDir, cntDir) = Streams.scratchDirs(
+      val Seq(srcDir, cntDir) = Scratch.dirs(s,
         "s33_stream_src", "s33_counts")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
@@ -1310,7 +1311,7 @@ object Streaming {
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"))
-      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+      val Seq(srcDir, stateRoot) = Scratch.dirs(s,
         "s32_stream_src", "s32_state")
       // time-ordered staging WITHOUT a global sort: range-split on
       // approx time quartiles (same-us ties across a cut are safe —
@@ -1399,7 +1400,7 @@ object Streaming {
         .select(col("event_type"), col("event_id"),
           col("value").as("v"), unix_micros(col("ts")).as("us"))
         .withColumn("hr", expr("us div 3600000000"))
-      val Seq(srcDir, barDir) = Streams.scratchDirs(
+      val Seq(srcDir, barDir) = Scratch.dirs(s,
         "s34_stream_src", "s34_bars")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
@@ -1454,7 +1455,7 @@ object Streaming {
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"),
           unix_micros(col("ts")).as("us"))
-      val Seq(srcDir, cntDir, stateRoot) = Streams.scratchDirs(
+      val Seq(srcDir, cntDir, stateRoot) = Scratch.dirs(s,
         "s35_stream_src", "s35_counts", "s35_state")
       val cuts = ev.stat.approxQuantile("us",
         Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
@@ -1537,7 +1538,7 @@ object Streaming {
       // across 4 batches
       val reqs = ev.filter(col("user_id") % 97 === 3)
         .select(col("user_id"), col("event_id"))
-      val Seq(srcDir, keyDir) = Streams.scratchDirs(
+      val Seq(srcDir, keyDir) = Scratch.dirs(s,
         "s36_stream_src", "s36_tombstones")
       writeSplitSingle(reqs, col("event_id") % 4, 4,
         srcDir)
@@ -1610,7 +1611,7 @@ object Streaming {
         .select(col("event_type").as("series"),
           expr("unix_micros(ts) div 3600000000").as("hr"),
           col("event_id"), col("ts"))
-      val Seq(srcDir, cntDir) = Streams.scratchDirs(
+      val Seq(srcDir, cntDir) = Scratch.dirs(s,
         "s37_stream_src", "s37_counts")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
@@ -1705,7 +1706,7 @@ object Streaming {
         |FROM x""".stripMargin) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"))
-      val Seq(srcDir, cntDir) = Streams.scratchDirs(
+      val Seq(srcDir, cntDir) = Scratch.dirs(s,
         "s38_stream_src", "s38_counts")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
@@ -1853,7 +1854,7 @@ object Streaming {
       val r = ev.agg(min("wk"), max("wk")).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
       val cuts = (1 to 4).map(k => mn + ((mx - mn + 1) * k + 3) / 4 - 1)
-      val Seq(srcDir, stateRoot, looksDir) = Streams.scratchDirs(
+      val Seq(srcDir, stateRoot, looksDir) = Scratch.dirs(s,
         "s39_stream_src", "s39_state", "s39_looks")
       // batch index 1 + #cuts-below == the old (cuts(b-2), cuts(b-1)]
       // range filter (no lower bound for b = 1) in ONE pass; rows above
@@ -2001,7 +2002,7 @@ object Streaming {
       val r = ev.agg(min("wk"), max("wk")).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
       val cuts = (1 to 4).map(k => mn + ((mx - mn + 1) * k + 3) / 4 - 1)
-      val Seq(srcDir, stateRoot, looksDir) = Streams.scratchDirs(
+      val Seq(srcDir, stateRoot, looksDir) = Scratch.dirs(s,
         "s44_stream_src", "s44_state", "s44_looks")
       // batch index 1 + #cuts-below == the old (cuts(b-2), cuts(b-1)]
       // range filter (no lower bound for b = 1) in ONE pass; rows above
@@ -2100,7 +2101,7 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val (sel, media) = Planted.imageMedia(s, dir)
-      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+      val Seq(srcDir, sigRoot, mediaDir) = Scratch.dirs(s,
         "s47_stream_src", "s47_sigs", "s47_media")
       // render the fixture corpus ONCE; the per-batch splits read the
       // staged parquet back — filtering the mapPartitions render
@@ -2161,7 +2162,7 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val (sel, media) = Planted.audioMedia(s, dir)
-      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+      val Seq(srcDir, sigRoot, mediaDir) = Scratch.dirs(s,
         "s48_stream_src", "s48_sigs", "s48_media")
       // render the fixture corpus ONCE; per-batch splits read the staged
       // parquet back (the s47 lesson: filtering the mapPartitions render
@@ -2217,7 +2218,7 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val (sel, media) = Planted.videoMedia(s, dir)
-      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+      val Seq(srcDir, sigRoot, mediaDir) = Scratch.dirs(s,
         "s49_stream_src", "s49_sigs", "s49_media")
       // render the fixture corpus ONCE; per-batch splits read the staged
       // parquet back (mapPartitions renders can't be pruned)
@@ -2282,7 +2283,7 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY clip_id""".stripMargin) { (s, dir) =>
       val (sel, clips, grabs) = Planted.frameGrabCorpus(s, dir)
-      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+      val Seq(srcDir, sigRoot, mediaDir) = Scratch.dirs(s,
         "s50_stream_src", "s50_sigs", "s50_media")
       // render BOTH corpora once (the s47 lesson); the kind column
       // routes each row to its decoder inside the batch
@@ -2334,7 +2335,7 @@ object Streaming {
         Pipeline.bpeTrainOracleSql(10)) { (s, dir) =>
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
-      val Seq(srcDir, histRoot) = Streams.scratchDirs(
+      val Seq(srcDir, histRoot) = Scratch.dirs(s,
         "s51_stream_src", "s51_hist")
       writeSplitSingle(docs,
         pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
@@ -2366,7 +2367,7 @@ object Streaming {
         Pipeline.bpeEncodeOracleSql(10)) { (s, dir) =>
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "text")
-      val Seq(srcDir, histRoot) = Streams.scratchDirs(
+      val Seq(srcDir, histRoot) = Scratch.dirs(s,
         "s52_stream_src", "s52_hist")
       writeSplitSingle(docs,
         pmod(xxhash64(col("doc_id")), lit(4L)), 4, srcDir)
@@ -2413,7 +2414,7 @@ object Streaming {
         |FROM documents WHERE doc_id % 4 = 0
         |ORDER BY rec_id""".stripMargin) { (s, dir) =>
       val (sel, recs, snips) = Planted.audioSnippetCorpus(s, dir)
-      val Seq(srcDir, sigRoot, mediaDir) = Streams.scratchDirs(
+      val Seq(srcDir, sigRoot, mediaDir) = Scratch.dirs(s,
         "s54_stream_src", "s54_sigs", "s54_media")
       // wide-binary WRITES have the same contiguous-buffer hazard as
       // the reads: 32 concurrent writers × a default 128 MB row group
@@ -2482,7 +2483,7 @@ object Streaming {
         |FROM t2 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val events = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id", "event_type")
-      val Seq(srcDir, viewRoot) = Streams.scratchDirs(
+      val Seq(srcDir, viewRoot) = Scratch.dirs(s,
         "s53_stream_src", "s53_view")
       // the changelog: base rows as three insert batches, then the
       // insert commit, then the delete commit (old rows, sign −1)
@@ -2580,7 +2581,7 @@ object Streaming {
         .select(col("doc_id"), col("n_chars").cast("long").as("x"),
           (substring(md5(col("doc_id").cast("string")), 1, 1) < "c")
             .as("cal"))
-      val Seq(srcDir, histRoot) = Streams.scratchDirs(
+      val Seq(srcDir, histRoot) = Scratch.dirs(s,
         "s45_stream_src", "s45_hist")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
@@ -2668,7 +2669,7 @@ object Streaming {
       // steps=1: the published model the batch p179 gate calibrates
       val (_, w) = TextAnalysis.logregFit(docs, steps = 1, lr = 1.0,
         posLang = "en", langCol = "lang", textCol = "text")
-      val Seq(srcDir, binRoot) = Streams.scratchDirs(
+      val Seq(srcDir, binRoot) = Scratch.dirs(s,
         "s46_stream_src", "s46_bins")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
@@ -2729,7 +2730,7 @@ object Streaming {
       import graft.pipeline.Corpus
       val docs = graft.Tables.load(s, dir, "documents")
         .select("doc_id", "source")
-      val Seq(srcDir, cntRoot, candRoot) = Streams.scratchDirs(
+      val Seq(srcDir, cntRoot, candRoot) = Scratch.dirs(s,
         "s40_stream_src", "s40_counts", "s40_cands")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
@@ -2857,7 +2858,7 @@ object Streaming {
       // scoring — an evaluation stream consumes a published model)
       val (_, w) = TextAnalysis.logregFit(docs, steps = 3, lr = 1.0,
         posLang = "en", langCol = "lang", textCol = "text")
-      val Seq(srcDir, cntRoot) = Streams.scratchDirs(
+      val Seq(srcDir, cntRoot) = Scratch.dirs(s,
         "s41_stream_src", "s41_hist")
       writeSplitSingle(docs, col("doc_id") % 4, 4,
         srcDir)
@@ -2896,7 +2897,7 @@ object Streaming {
       graft.operators.Pipeline.kmOracleSql) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id", "ts")
-      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+      val Seq(srcDir, stateRoot) = Scratch.dirs(s,
         "s42_stream_src", "s42_spans")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
@@ -2937,7 +2938,7 @@ object Streaming {
       graft.operators.Pipeline.logRankOracleSql) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id", "ts")
-      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+      val Seq(srcDir, stateRoot) = Scratch.dirs(s,
         "s55_stream_src", "s55_spans")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)
@@ -2993,7 +2994,7 @@ object Streaming {
         |FROM f""".stripMargin) { (s, dir) =>
       val ev = graft.Tables.load(s, dir, "events")
         .select("event_id", "user_id")
-      val Seq(srcDir, stateRoot) = Streams.scratchDirs(
+      val Seq(srcDir, stateRoot) = Scratch.dirs(s,
         "s43_stream_src", "s43_users")
       writeSplitSingle(ev, col("event_id") % 4, 4,
         srcDir)

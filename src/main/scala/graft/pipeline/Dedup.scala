@@ -30,16 +30,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dupes"))
 
-  /** Materialize a signature DataFrame to a temp-parquet barrier and read
-    * it back. Serves two purposes at once: it is the CollapseProject
-    * barrier (without it the minhash expression inlines into every band
-    * slice — k×bands recompute per row, measured 14× slower at sf0.1),
-    * and unlike a plan-lifetime `persist()` it leaks nothing into the
-    * session's block manager — `getPersistentRDDs` stays empty. At 100 TB
-    * the signature table (~100 bytes/doc regardless of doc size) is what
-    * you'd write to durable scratch storage anyway; swap the temp dir for
-    * a real path and the plan is unchanged.
-    */
   /** Signature construction is CPU-bound (per-doc gram building +
     * hashing + k minhash passes), so its parallelism must not be capped
     * by the SOURCE layout — a corpus landing in few large files would
@@ -58,38 +48,6 @@ object Dedup {
     if (parts >= target) df else df.repartition(target)
   }
 
-  // One registry + one shutdown hook for every barrier dir this JVM
-  // creates (a hook per call would accumulate hook threads). Dirs must
-  // outlive the call — the returned plan lazily re-reads them — so they
-  // are reclaimed at JVM exit; long-lived services would point barriers
-  // at managed scratch storage with its own retention instead.
-  // Every entry carries the FileSystem it was created through, so
-  // cleanup works for any Hadoop scheme, not just the local FS.
-  private val barrierDirs = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem]()
-  private lazy val barrierHook: Unit = {
-    sys.addShutdownHook {
-      barrierDirs.forEach((d, fs) =>
-        try { fs.delete(d, true); () } catch { case _: Throwable => () })
-    }
-    ()
-  }
-
-  /** Scratch root for barrier dirs. `graft.barrier.dir` (Spark runtime
-    * conf) may point at ANY Hadoop-resolvable URI — `file://`,
-    * `hdfs://`, `s3a://` — and every barrier operation (create, write,
-    * footer probe, cleanup) goes through that scheme's FileSystem; the
-    * default is the local tmp dir. This is what makes "swap the temp
-    * dir for durable scratch" literally true on a cluster: set the conf
-    * and the plans are unchanged.
-    */
-  private def barrierRoot(
-      spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.getOption("graft.barrier.dir").getOrElse(
-        new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-          .toURI.toString))
-
   /** Fan a parallelism-starved scan out to the session's cores before
     * per-row-heavy work (optimization guide §2.6 — idle capacity): a
     * gate-scale parquet table is ONE input split, so an expensive
@@ -106,41 +64,58 @@ object Dedup {
     if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
   }
 
+  /** Materialize a signature DataFrame to a temp-parquet barrier and read
+    * it back. Serves two purposes at once: it is the CollapseProject
+    * barrier (without it the minhash expression inlines into every band
+    * slice — k×bands recompute per row, measured 14× slower at sf0.1),
+    * and unlike a plan-lifetime `persist()` it leaks nothing into the
+    * session's block manager — `getPersistentRDDs` stays empty. At 100 TB
+    * the signature table (~100 bytes/doc regardless of doc size) is what
+    * you'd write to durable scratch storage anyway; point
+    * `graft.barrier.dir` at a real path and the plan is unchanged.
+    *
+    * The dir is a fresh barrier of the current [[graft.Scratch]] scope.
+    * The returned plan re-reads it lazily, so it lives until the scope
+    * closes, or until the caller releases it ([[graft.Scratch.release]])
+    * once nothing references it.
+    */
   private[graft] def materializeBarrier(df: DataFrame, tag: String): DataFrame =
     materializeBarrierAt(df, tag)._1
 
   private[graft] def materializeBarrierAt(
       df: DataFrame, tag: String): (DataFrame, org.apache.hadoop.fs.Path) = {
-    barrierHook
     val spark = df.sparkSession
-    val root = barrierRoot(spark)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dir = new org.apache.hadoop.fs.Path(root,
-      s"graft-$tag-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(dir)
-    barrierDirs.put(dir, fs)
+    val dir = graft.Scratch.current(spark).barrier(spark, tag)
     df.write.mode("overwrite").parquet(dir.toString)
     (spark.read.parquet(dir.toString), dir)
+  }
+
+  /** `f` applied to an open reader of every parquet file directly under
+    * `dir`, through the session's Hadoop conf: driver-side file
+    * metadata, no Spark job. The one footer probe behind the barrier
+    * count and stats readers below and the layout checks of x16/x17.
+    */
+  private[graft] def parquetFooters[T](spark: org.apache.spark.sql.SparkSession,
+      dir: org.apache.hadoop.fs.Path)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): Seq[T] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dir.getFileSystem(conf).listStatus(dir).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try f(r) finally r.close()
+      }
   }
 
   /** Row count of a just-written barrier, read from the parquet FOOTERS
     * on the driver — file metadata, no Spark job. Used for bounded
     * plan-selection scalars (e.g. "any exact dups at all?") where even
-    * a count() job would be pure overhead. Listing and reads go through
-    * the barrier's own FileSystem, so the probe works on any scheme.
+    * a count() job would be pure overhead.
     */
-  private[graft] def barrierRowCount(dir: org.apache.hadoop.fs.Path): Long = {
-    val fs = Option(barrierDirs.get(dir)).getOrElse(
-      dir.getFileSystem(new org.apache.hadoop.conf.Configuration()))
-    fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, fs.getConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
+  private[graft] def barrierRowCount(spark: org.apache.spark.sql.SparkSession,
+      dir: org.apache.hadoop.fs.Path): Long =
+    parquetFooters(spark, dir)(_.getRecordCount).sum
 
   /** Min AND max of an int64 column across a just-written barrier,
     * from the parquet footer STATISTICS (zero Spark jobs) — None when
@@ -149,34 +124,26 @@ object Dedup {
     * of re-scanning the barrier.
     */
   private[graft] def barrierColumnMinMaxLong(
+      spark: org.apache.spark.sql.SparkSession,
       dir: org.apache.hadoop.fs.Path, column: String): Option[(Long, Long)] = {
-    val fs = Option(barrierDirs.get(dir)).getOrElse(
-      dir.getFileSystem(new org.apache.hadoop.conf.Configuration()))
     import scala.jdk.CollectionConverters._
-    val ranges = fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .flatMap { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, fs.getConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          r.getFooter.getBlocks.asScala
-            .filter(_.getRowCount > 0)
-            .flatMap { block =>
-              block.getColumns.asScala
-                .filter(_.getPath.toDotString == column)
-                .map { c =>
-                  val s = c.getStatistics
-                  if (s == null || s.isEmpty || !s.hasNonNullValue) None
-                  else (s.genericGetMin, s.genericGetMax) match {
-                    case (lo: java.lang.Long, hi: java.lang.Long) =>
-                      Some((lo.longValue(), hi.longValue()))
-                    case _ => None
-                  }
-                }
+    val ranges = parquetFooters(spark, dir) { r =>
+      r.getFooter.getBlocks.asScala
+        .filter(_.getRowCount > 0)
+        .flatMap { block =>
+          block.getColumns.asScala
+            .filter(_.getPath.toDotString == column)
+            .map { c =>
+              val s = c.getStatistics
+              if (s == null || s.isEmpty || !s.hasNonNullValue) None
+              else (s.genericGetMin, s.genericGetMax) match {
+                case (lo: java.lang.Long, hi: java.lang.Long) =>
+                  Some((lo.longValue(), hi.longValue()))
+                case _ => None
+              }
             }
-        } finally r.close()
-      }
+        }
+    }.flatten
     if (ranges.isEmpty || ranges.contains(None)) None
     else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
   }
@@ -186,76 +153,27 @@ object Dedup {
     * row group lacks stats for the column. Powers driver-side plan
     * selection bounds, e.g. "membership ≤ clusters × max(n)".
     */
-  private[pipeline] def barrierColumnMaxLong(
+  private[graft] def barrierColumnMaxLong(
+      spark: org.apache.spark.sql.SparkSession,
       dir: org.apache.hadoop.fs.Path, column: String): Option[Long] = {
-    val fs = Option(barrierDirs.get(dir)).getOrElse(
-      dir.getFileSystem(new org.apache.hadoop.conf.Configuration()))
     import scala.jdk.CollectionConverters._
-    val maxes = fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .flatMap { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, fs.getConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          r.getFooter.getBlocks.asScala.flatMap { block =>
-            block.getColumns.asScala
-              .filter(_.getPath.toDotString == column)
-              .map { c =>
-                val s = c.getStatistics
-                if (s == null || s.isEmpty && block.getRowCount > 0) None
-                else if (!s.hasNonNullValue) Some(Long.MinValue) // all null
-                else s.genericGetMax match {
-                  case l: java.lang.Long => Some(l.longValue())
-                  case _ => None
-                }
-              }
+    val maxes = parquetFooters(spark, dir) { r =>
+      r.getFooter.getBlocks.asScala.flatMap { block =>
+        block.getColumns.asScala
+          .filter(_.getPath.toDotString == column)
+          .map { c =>
+            val s = c.getStatistics
+            if (s == null || s.isEmpty && block.getRowCount > 0) None
+            else if (!s.hasNonNullValue) Some(Long.MinValue) // all null
+            else s.genericGetMax match {
+              case l: java.lang.Long => Some(l.longValue())
+              case _ => None
+            }
           }
-        } finally r.close()
       }
+    }.flatten
     if (maxes.isEmpty || maxes.contains(None)) None
     else Some(maxes.flatten.max)
-  }
-
-  /** Eagerly reclaim a barrier dir whose data is no longer referenced —
-    * iterative algorithms cap scratch usage this way instead of letting
-    * every round's barrier pile up until JVM exit.
-    */
-  private[graft] def releaseBarrier(dir: org.apache.hadoop.fs.Path): Unit = {
-    Option(barrierDirs.remove(dir)).foreach { fs =>
-      try { fs.delete(dir, true); () } catch { case _: Throwable => () }
-    }
-  }
-
-  // Cross-call plan memos (e.g. Pipeline.nearDupMemo) may hold
-  // DataFrames that lazily re-read a barrier dir; a blanket release
-  // yanks the files out from under them (the r11 p25 bench failure:
-  // the timed rerun reused the memoized pair table whose sigs barrier
-  // the previous run's release had deleted). Memo owners register an
-  // invalidation hook here and releaseAllBarriers fires them, so "all
-  // barriers gone" and "no plan still points at one" stay one event.
-  private val barrierResetHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
-  private[graft] def onBarrierReset(hook: Runnable): Unit =
-    barrierResetHooks.add(hook)
-
-  /** Reclaim EVERY live barrier dir. Safe between fully-materialized
-    * query executions — a barrier is only read while the query that
-    * wrote it executes — so the re-timing loops (Bench, GateTimer)
-    * call this between runs and repeated timing no longer accumulates
-    * scratch until JVM exit (ADVICE r10). Fires the registered memo
-    * invalidation hooks so no cached plan outlives its barrier.
-    */
-  private[graft] def releaseAllBarriers(): Unit = {
-    import scala.jdk.CollectionConverters._
-    barrierDirs.keySet.asScala.toSeq.foreach(releaseBarrier)
-    barrierResetHooks.forEach(_.run())
-  }
-
-  /** Test visibility: barrier dirs currently awaiting JVM-exit cleanup. */
-  private[graft] def liveBarrierDirs: Seq[org.apache.hadoop.fs.Path] = {
-    import scala.jdk.CollectionConverters._
-    barrierDirs.keySet.asScala.toSeq
   }
 
   /** Banded-LSH candidate pairs from a (id, mh) signature table: explode
@@ -452,9 +370,9 @@ object Dedup {
     // Dup-free corpus → the collapsed plan degenerates to the plain
     // one. The emptiness probe is a parquet-footer read on the driver
     // (file metadata, zero Spark jobs).
-    val nClusters = barrierRowCount(dupDir)
+    val nClusters = barrierRowCount(sigs.sparkSession, dupDir)
     if (nClusters == 0) {
-      releaseBarrier(dupDir)
+      graft.Scratch.release(dupDir)
       return verifiedPairs(sigs, setCol, bands, r, threshold)
     }
     // Membership is a VIEW over the signature barrier (2-column pruned
@@ -466,7 +384,7 @@ object Dedup {
     // membership ≤ clusters × max(n), both read driver-side with zero
     // jobs. The mega-cluster case (huge max n) exceeds the bound and
     // keeps stats/AQE planning, which is then the right plan.
-    val maxN = barrierColumnMaxLong(dupDir, "n").getOrElse(Long.MaxValue)
+    val maxN = barrierColumnMaxLong(sigs.sparkSession, dupDir, "n").getOrElse(Long.MaxValue)
     val small = maxN > 0 && nClusters <= MemberBroadcastBound / maxN
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val dupClusters = hinted(dupClustersRaw.select("dg", "rep"))
@@ -1216,7 +1134,7 @@ object Dedup {
         .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
         .distinct(),
       "cc-edges")
-    if (barrierRowCount(edgesDir) <= localBound) {
+    if (barrierRowCount(pairs.sparkSession, edgesDir) <= localBound) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val es = edges.select(col("src"), col("dst")).collect()
@@ -1265,10 +1183,10 @@ object Dedup {
             greatest(col("ca"), col("cb")).as("dst"))
           .distinct(),
         s"cc-contract$level")
-      if (curEdgesDir ne edgesDir) releaseBarrier(curEdgesDir)
+      if (curEdgesDir ne edgesDir) graft.Scratch.release(curEdgesDir)
       // an empty skeleton is converged regardless of the bound (specs
       // force the distributed path with localBound = -1)
-      val nSkeleton = barrierRowCount(cDir)
+      val nSkeleton = barrierRowCount(pairs.sparkSession, cDir)
       if (nSkeleton == 0L || nSkeleton <= localBound) {
         // the skeleton fits: union-find it driver-side, broadcast the
         // label->root composition out, then canonicalize every
@@ -1280,7 +1198,7 @@ object Dedup {
         import spark.implicits._
         val es = cEdges.select(col("src"), col("dst")).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
-        releaseBarrier(cDir)
+        graft.Scratch.release(cDir)
         val roots = localComponents(es)
         val composed = if (roots.isEmpty) comp
         else {
@@ -1308,7 +1226,7 @@ object Dedup {
             .select(col("doc_id"),
               coalesce(col("_nl"), col("comp")).as("comp")),
           s"cc-level$level")
-        releaseBarrier(compDir)
+        graft.Scratch.release(compDir)
         comp = nextComp
         compDir = nextDir
         curEdges = cEdges

@@ -137,15 +137,15 @@ object Fuzzy {
         .filter(col("n") >= Dedup.CollapseThreshold)
         .select("s", "rep", "n"),
       "fuzzy-dups")
-    val nClusters = Dedup.barrierRowCount(dupDir)
+    val nClusters = Dedup.barrierRowCount(df.sparkSession, dupDir)
     if (nClusters == 0) {
-      Dedup.releaseBarrier(dupDir)
+      graft.Scratch.release(dupDir)
       return rawPairs(base, d)
     }
     // broadcast-shape the membership view from footer metadata (see
     // Dedup.lshCollapsedPairs: membership ≤ clusters × max(n), zero
     // jobs; above the bound stats/AQE planning takes over)
-    val maxN = Dedup.barrierColumnMaxLong(dupDir, "n")
+    val maxN = Dedup.barrierColumnMaxLong(df.sparkSession, dupDir, "n")
       .getOrElse(Long.MaxValue)
     val small = maxN > 0 &&
       nClusters <= Dedup.MemberBroadcastBound / maxN

@@ -357,7 +357,7 @@ object TextAnalysis {
     import s.implicits._
     val (learned, _, dir) =
       bpeLoop(vocab0, merges, localBound)((_, _) => ())
-    Dedup.releaseBarrier(dir)
+    graft.Scratch.release(dir)
     learned.toDF("step", "pair", "freq")
   }
 
@@ -410,9 +410,9 @@ object TextAnalysis {
     // count induction makes the incremental and recount argmax
     // sequences identical, so the local loop IS both forms' result;
     // the distributed incremental delta below is the at-scale path
-    if (Dedup.barrierRowCount(vdir) <= localBound) {
+    if (Dedup.barrierRowCount(s, vdir) <= localBound) {
       val (learned, _, d) = bpeLoopLocal(vocab, vdir, merges)((_, _) => ())
-      Dedup.releaseBarrier(d)
+      graft.Scratch.release(d)
       return learned.toDF("step", "pair", "freq")
     }
     // the one full pair count — paid once, like get_pair_statistics
@@ -476,14 +476,14 @@ object TextAnalysis {
           .coalesce(4)
         val (npc, npdir) = Dedup.materializeBarrierAt(pcNext,
           s"bpei-pc$step")
-        Dedup.releaseBarrier(pdir)
+        graft.Scratch.release(pdir)
         pc = npc; pdir = npdir
-        Dedup.releaseBarrier(vdir)
+        graft.Scratch.release(vdir)
         vocab = nv.drop("_rw"); vdir = nvdir
       }
     }
-    Dedup.releaseBarrier(pdir)
-    Dedup.releaseBarrier(vdir)
+    graft.Scratch.release(pdir)
+    graft.Scratch.release(vdir)
     learned.result().toDF("step", "pair", "freq")
   }
 
@@ -545,7 +545,7 @@ object TextAnalysis {
       levels += ((lvl, if (r.isNullAt(0)) 0L else r.getLong(0),
         if (r.isNullAt(1)) 0L else r.getLong(1)))
     }
-    Dedup.releaseBarrier(dir)
+    graft.Scratch.release(dir)
     levels.result().toDF("step", "n_symbols", "n_words")
   }
 
@@ -700,7 +700,7 @@ object TextAnalysis {
         "element_at(split(seq, ' '), i + 1)))")
     var (vocab, dir) =
       Dedup.materializeBarrierAt(vocab0, "bpe-v0")
-    if (Dedup.barrierRowCount(dir) <= localBound)
+    if (Dedup.barrierRowCount(vocab0.sparkSession, dir) <= localBound)
       return bpeLoopLocal(vocab, dir, merges, onLevelRows)(onLevel)
     onLevel(0, vocab)
     val learned = Seq.newBuilder[(Int, String, Long)]
@@ -732,7 +732,7 @@ object TextAnalysis {
             lit(" " + pair.replace(" ", "") + " ")),
             lit("  "), lit(" "))).as("seq") +: others.toSeq: _*)
         val (nv, nd) = Dedup.materializeBarrierAt(next, s"bpe-v$step")
-        Dedup.releaseBarrier(dir)
+        graft.Scratch.release(dir)
         vocab = nv; dir = nd
         onLevel(step, vocab)
       }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Scratch.rmTree
 
 /** Mutable per-user state for the flatMapGroupsWithState operator
   * (top-level so Spark can derive a Product encoder). */
@@ -306,27 +307,6 @@ object Streams {
         .awaitTermination()
       spark.table(name)
     }
-
-  /** `$java.io.tmpdir/graft_fmt/<name>`: a streaming gate's scratch path. */
-  def scratch(name: String): String =
-    java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", name).toString
-
-  /** The [[scratch]] paths of `names`, each removed; the first — the
-    * gate's staged source dir — is recreated empty. The others stay
-    * absent until something writes them, so a batch body may test a
-    * side dir's `exists()` to tell the first batch from later ones.
-    */
-  def scratchDirs(names: String*): Seq[String] = {
-    val dirs = names.map(scratch)
-    dirs.foreach(d => rmTree(new java.io.File(d)))
-    dirs.headOption.foreach(d => new java.io.File(d).mkdirs())
-    dirs
-  }
-
-  def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
 
   /** The file-stream source consumes whole files, so each staged ingest
     * batch must land as ONE parquet file in the watched dir.

@@ -1029,21 +1029,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("x42: IVF-PQ probe prunes the cell-partitioned CODES scan via DPP") {
-    val df = operators.Scale.ivfPqLayoutServe(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val pruned = p.linesIterator.filter(l =>
-      l.contains("PartitionFilters") && l.contains("dynamicpruning")).toSeq
-    assert(pruned.nonEmpty, s"no DPP on the codes scan:\n$p")
-    assert(pruned.exists(_.contains("cell")),
-      s"DPP filter not on the cell column:\n${pruned.mkString("\n")}")
-    // and the stored artifact must be codes-only: no float vector
-    // column in the layout schema
-    val layout = spark.read.parquet(java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_fmt", "x42_ivfpq_layout").toString)
-    assert(layout.columns.toSet == Set("cell", "vec_id", "codes", "rnorm"),
-      s"layout not codes-only: ${layout.columns.mkString(",")}")
+    Scratch.scoped(spark) {
+      val df = operators.Scale.ivfPqLayoutServe(spark, sf)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      val pruned = p.linesIterator.filter(l =>
+        l.contains("PartitionFilters") && l.contains("dynamicpruning")).toSeq
+      assert(pruned.nonEmpty, s"no DPP on the codes scan:\n$p")
+      assert(pruned.exists(_.contains("cell")),
+        s"DPP filter not on the cell column:\n${pruned.mkString("\n")}")
+      // and the stored artifact must be codes-only: no float vector
+      // column in the layout schema
+      val Seq(layoutDir) = Scratch.current(spark).root.toFile.listFiles()
+        .filter(_.getName.startsWith("x42_ivfpq_layout")).toSeq
+      val layout = spark.read.parquet(layoutDir.toString)
+      assert(layout.columns.toSet == Set("cell", "vec_id", "codes", "rnorm"),
+        s"layout not codes-only: ${layout.columns.mkString(",")}")
+    }
   }
 
   test("x12: Morton interleave matches the reference bit math") {

@@ -10,7 +10,7 @@ import scala.concurrent.duration._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import graft.streaming.Streams
+import graft.Scratch
 
 /** The `-C` cache across queries: one memo per [[Engine]], views
   * published by rename with their schema, so a hit runs no Spark job.
@@ -24,7 +24,7 @@ class CacheSpec extends SparkSpec {
   private val made = scala.collection.mutable.Set.empty[Path]
 
   override def afterAll(): Unit = {
-    made.foreach(d => Streams.rmTree(d.toFile))
+    made.foreach(d => Scratch.rmTree(d.toFile))
     super.afterAll()
   }
 
@@ -134,7 +134,7 @@ class CacheSpec extends SparkSpec {
     assert(answer(e, f) == expect(2, 4))
     val dir = cacheDirOf(f)
     assert(Files.exists(dir.resolve("t_0/_SUCCESS")))
-    Streams.rmTree(dir.toFile)
+    Scratch.rmTree(dir.toFile)
     assert(answer(e, f) == expect(2, 4))
     assert(Files.exists(dir.resolve("t_0/_SUCCESS")))
   }

@@ -500,6 +500,7 @@ class CliPipeSpec extends SparkSpec {
       assert(!second.contains("Ingested"), s"second run: $second")
     } finally {
       System.setErr(oldErr)
+      graft.Scratch.rmTree(ContentHashCache.dirFor(Seq(f.toString), false).toFile)
       java.nio.file.Files.deleteIfExists(f)
     }
   }
@@ -543,7 +544,11 @@ class CliPipeSpec extends SparkSpec {
       assert(canonJson(out) == canonJson("""[{"n":2}]"""))
       assert(!errBuf.toString("UTF-8").contains("Cache invalid"),
         s"pipe run re-imported: $errBuf")
-    } finally System.setErr(oldErr)
+    } finally {
+      System.setErr(oldErr)
+      graft.Scratch.rmTree(ContentHashCache.dirFor(Seq(f.toString), false).toFile)
+      java.nio.file.Files.deleteIfExists(f)
+    }
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.dsq
 
-import graft.streaming.Streams
+import graft.Scratch
 
 /** An empty CSV or TSV field, quoted or not, reads as "" — never null —
   * with and without `-C` and `-n`, and `-n` still converts a numeric
@@ -44,7 +44,7 @@ class CsvEmptyFieldSpec extends SparkSpec {
       try {
         // twice, so that with -C the second answers come from the cache
         for (_ <- 1 to 2) check(sql => canonJson(run(Seq(f), sql, opts)), numbers)
-      } finally Streams.rmTree(ContentHashCache.dirFor(Seq(f), numbers).toFile)
+      } finally Scratch.rmTree(ContentHashCache.dirFor(Seq(f), numbers).toFile)
     }
   }
 }

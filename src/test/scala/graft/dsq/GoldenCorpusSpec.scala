@@ -263,36 +263,45 @@ class GoldenCorpusSpec extends SparkSpec {
     // persists in tmpdir, so reused content would make the cold run warm
     val tag = java.lang.Long.toHexString(System.nanoTime())
     java.nio.file.Files.writeString(f, s"a,b\n1,x$tag\n2,y\n3,z\n")
-    val q = "SELECT COUNT(1) AS n, SUM(a) AS s FROM {}"
-    val opts = DsqOptions(cacheEnabled = true, convertNumbers = true)
-    def runCaptured(): (String, String, Long) = {
-      val errBuf = new java.io.ByteArrayOutputStream()
-      val oldErr = System.err
-      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
-      try {
-        val t0 = System.nanoTime()
-        val out = run(Seq(f.toString), q, opts)
-        (out, errBuf.toString("UTF-8"), (System.nanoTime() - t0) / 1000000)
-      } finally System.setErr(oldErr)
+    // the view dirs of both contents and the input go at the end
+    val dirs = scala.collection.mutable.Buffer(
+      ContentHashCache.dirFor(Seq(f.toString), convertNumbers = true))
+    try {
+      val q = "SELECT COUNT(1) AS n, SUM(a) AS s FROM {}"
+      val opts = DsqOptions(cacheEnabled = true, convertNumbers = true)
+      def runCaptured(): (String, String, Long) = {
+        val errBuf = new java.io.ByteArrayOutputStream()
+        val oldErr = System.err
+        System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+        try {
+          val t0 = System.nanoTime()
+          val out = run(Seq(f.toString), q, opts)
+          (out, errBuf.toString("UTF-8"), (System.nanoTime() - t0) / 1000000)
+        } finally System.setErr(oldErr)
+      }
+      val (cold, coldErr, coldMs) = runCaptured()
+      assert(coldErr.contains("Cache invalid, re-import required."),
+        s"first import did not warn: $coldErr")
+      val (warm, warmErr, warmMs) = runCaptured()
+      assert(canonJson(warm) == canonJson("""[{"n":3,"s":6}]"""))
+      assert(canonJson(cold) == canonJson(warm))
+      assert(!warmErr.contains("Cache invalid"),
+        s"warm run re-imported: $warmErr")
+      // the reference's within_seconds=5 bound, with a relative escape
+      // hatch so a loaded CI host can't flake an otherwise-correct run
+      assert(warmMs < math.max(5000L, coldMs * 3),
+        s"cached re-query took ${warmMs}ms (cold ${coldMs}ms)")
+      // change the file → content hash changes → re-import warning + new data
+      java.nio.file.Files.writeString(f, s"a,b\n1,x$tag\n2,y\n3,z\n4,w\n")
+      dirs += ContentHashCache.dirFor(Seq(f.toString), convertNumbers = true)
+      val (changed, changedErr, _) = runCaptured()
+      assert(canonJson(changed) == canonJson("""[{"n":4,"s":10}]"""))
+      assert(changedErr.contains("Cache invalid, re-import required."),
+        s"no re-import after content change: $changedErr")
+    } finally {
+      dirs.foreach(d => graft.Scratch.rmTree(d.toFile))
+      java.nio.file.Files.deleteIfExists(f)
     }
-    val (cold, coldErr, coldMs) = runCaptured()
-    assert(coldErr.contains("Cache invalid, re-import required."),
-      s"first import did not warn: $coldErr")
-    val (warm, warmErr, warmMs) = runCaptured()
-    assert(canonJson(warm) == canonJson("""[{"n":3,"s":6}]"""))
-    assert(canonJson(cold) == canonJson(warm))
-    assert(!warmErr.contains("Cache invalid"),
-      s"warm run re-imported: $warmErr")
-    // the reference's within_seconds=5 bound, with a relative escape
-    // hatch so a loaded CI host can't flake an otherwise-correct run
-    assert(warmMs < math.max(5000L, coldMs * 3),
-      s"cached re-query took ${warmMs}ms (cold ${coldMs}ms)")
-    // change the file → content hash changes → re-import warning + new data
-    java.nio.file.Files.writeString(f, s"a,b\n1,x$tag\n2,y\n3,z\n4,w\n")
-    val (changed, changedErr, _) = runCaptured()
-    assert(canonJson(changed) == canonJson("""[{"n":4,"s":10}]"""))
-    assert(changedErr.contains("Cache invalid, re-import required."),
-      s"no re-import after content change: $changedErr")
   }
 
   // README.md:389-403 — `->` returns a JSON fragment (strings stay

@@ -145,15 +145,21 @@ class UnitSpec extends SparkSpec {
     val salt = java.util.UUID.randomUUID().toString.take(8)
     java.nio.file.Files.writeString(tmp, s"a,b\n1,$salt\n")
     def mkCache() = new ContentHashCache(spark, Seq(tmp.toString), enabled = true)
-    var ingests = 0
-    def ingest() = { ingests += 1
-      Flatten(Readers.csv(spark, tmp.toString, ",")) }
-    val c1 = mkCache()
-    c1.getOrIngest("t_0", () => ingest()).collect()
-    c1.getOrIngest("t_0", () => ingest()).collect()
-    assert(ingests == 1) // second call hits parquet
-    val before = mkCache().cacheDir
-    java.nio.file.Files.writeString(tmp, s"a,b\n2,$salt\n")
-    assert(mkCache().cacheDir != before) // content change → new key
+    val made = ContentHashCache.dirFor(Seq(tmp.toString), false)
+    try {
+      var ingests = 0
+      def ingest() = { ingests += 1
+        Flatten(Readers.csv(spark, tmp.toString, ",")) }
+      val c1 = mkCache()
+      c1.getOrIngest("t_0", () => ingest()).collect()
+      c1.getOrIngest("t_0", () => ingest()).collect()
+      assert(ingests == 1) // second call hits parquet
+      val before = mkCache().cacheDir
+      java.nio.file.Files.writeString(tmp, s"a,b\n2,$salt\n")
+      assert(mkCache().cacheDir != before) // content change → new key
+    } finally {
+      graft.Scratch.rmTree(made.toFile)
+      java.nio.file.Files.deleteIfExists(tmp)
+    }
   }
 }

@@ -1530,21 +1530,23 @@ class PipelineSpec extends SparkSpec {
 
   test("components reclaims level barriers eagerly (scratch ≤ 2 dirs)") {
     import spark.implicits._
-    def lvlDirs = Dedup.liveBarrierDirs
-      .filter(d => d.getName.startsWith("graft-cc-level") ||
-        d.getName.startsWith("graft-cc-contract")).toSet
-    val before = lvlDirs
-    // a 6-node chain needs several contraction levels to drain;
-    // localBound = -1 forces the distributed path this spec targets
-    val pairs = (1L until 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.componentsBounded(pairs, 50, localBound = -1L)
-    assert(comp.collect().map(_.getLong(1)).toSet == Set(1L))
-    // only the final comp dir (backing the returned plan) and its
-    // feeding contract dir may remain live; every superseded level
-    // must have been reclaimed as soon as the next one landed
-    val added = lvlDirs -- before
-    assert(added.size <= 2,
-      s"level barriers piled up: ${added.mkString(", ")}")
+    graft.Scratch.scoped(spark) {
+      def lvlDirs = graft.Scratch.current(spark).barrierDirs
+        .filter(d => d.getName.startsWith("graft-cc-level") ||
+          d.getName.startsWith("graft-cc-contract")).toSet
+      val before = lvlDirs
+      // a 6-node chain needs several contraction levels to drain;
+      // localBound = -1 forces the distributed path this spec targets
+      val pairs = (1L until 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val comp = Dedup.componentsBounded(pairs, 50, localBound = -1L)
+      assert(comp.collect().map(_.getLong(1)).toSet == Set(1L))
+      // only the final comp dir (backing the returned plan) and its
+      // feeding contract dir may remain live; every superseded level
+      // must have been reclaimed as soon as the next one landed
+      val added = lvlDirs -- before
+      assert(added.size <= 2,
+        s"level barriers piled up: ${added.mkString(", ")}")
+    }
   }
 
   test("components: driver-side union-find == distributed label propagation") {
@@ -2202,10 +2204,11 @@ class PipelineSpec extends SparkSpec {
     // scheme-resolution path a cluster would use for hdfs://s3a) and
     // assert (a) results are unchanged, (b) the barriers — including the
     // fuzzy collapse path's dup index, so barrierRowCount's listStatus
-    // footer probe ran against the configured FS — actually land under it
+    // footer probe ran against the configured FS — actually land under
+    // it, and (c) closing the scope empties the configured root
     val root = java.nio.file.Files.createTempDirectory("graft-conf-root-")
     spark.conf.set("graft.barrier.dir", root.toUri.toString)
-    try {
+    try graft.Scratch.scoped(spark) {
       val planted = docs.limit(40).unionAll(docs.limit(5)
         .select((col("doc_id") + 9000).as("doc_id"), col("text")))
       val pairs = Dedup.minhashPairs(planted, "doc_id", "text",
@@ -2218,11 +2221,15 @@ class PipelineSpec extends SparkSpec {
         Dedup.minhashSigs(planted, "doc_id", "text", 64, 3), "conf-sigs")
       val agg = Dedup.lshCollapsedPairs(sigs, "sh", 16, 4, 0.5, None)
       assert(agg.filter(col("jaccard") === 1.0).count() >= 5)
-      val under = Dedup.liveBarrierDirs.filter(p =>
+      val under = graft.Scratch.current(spark).barrierDirs.filter(p =>
         p.toUri.getPath.startsWith(root.toString))
       assert(under.exists(_.getName.startsWith("graft-minhash-sigs-")))
       assert(under.exists(_.getName.startsWith("graft-lsh-dups-")))
     } finally spark.conf.unset("graft.barrier.dir")
+    val left = java.nio.file.Files.list(root)
+    try assert(left.count() == 0, "closed scope left barriers in the root")
+    finally left.close()
+    graft.Scratch.rmTree(root.toFile)
   }
 
   test("dup-cluster sketch: exact below caps, null on overflow, null digests skipped") {
@@ -6305,19 +6312,18 @@ class PipelineSpec extends SparkSpec {
     assert(got.exists(_._4 > 0), "no censored user in play")
   }
 
-  test("releaseAllBarriers invalidates the near-dup memo: a timed " +
-      "rerun rebuilds instead of reading a deleted barrier") {
-    // the GateTimer/Bench sequence that broke p25 in the r11 bench:
-    // run → releaseAllBarriers → run again. The second run must not
-    // reuse the memoized pair table whose sigs barrier was deleted.
-    val run1 = graft.SparkEntry.queries("p25_dedup_components")(
-      spark, sf).collect()
+  test("p25 in two successive scopes gives equal rows") {
+    // the GateTimer/Bench sequence that broke p25 in the r11 bench: a
+    // timed rerun must not reuse a memoized pair table whose sigs
+    // barrier went with the previous run's scratch
+    def run() = graft.Scratch.scoped(spark) {
+      graft.SparkEntry.queries("p25_dedup_components")(spark, sf).collect()
+    }
+    val run1 = run()
     assert(run1.nonEmpty)
-    Dedup.releaseAllBarriers()
-    val run2 = graft.SparkEntry.queries("p25_dedup_components")(
-      spark, sf).collect()
+    val run2 = run()
     assert(run2.map(_.toSeq).toSeq == run1.map(_.toSeq).toSeq,
-      "post-release rerun diverged from the first run")
+      "second-scope rerun diverged from the first run")
   }
 
   test("logRank: driver replay of the Mantel-Haenszel E/V sums over " +

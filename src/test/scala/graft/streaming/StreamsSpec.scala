@@ -46,7 +46,7 @@ class StreamsSpec extends graft.dsq.SparkSpec {
         (1L, Seq(0L, 1L, 2L), "4")))
       assert(spark.conf.get(partsKey) == "7")
     }
-    Streams.rmTree(new java.io.File(dir))
+    graft.Scratch.rmTree(new java.io.File(dir))
   }
 
   test("replay: a throwing perBatch reaches the caller and shuffle " +
@@ -62,6 +62,6 @@ class StreamsSpec extends graft.dsq.SparkSpec {
       assert(causes.contains(boom), s"boom not in the cause chain of $e")
       assert(spark.conf.get(partsKey) == "7")
     }
-    Streams.rmTree(new java.io.File(dir))
+    graft.Scratch.rmTree(new java.io.File(dir))
   }
 }
