@@ -140,6 +140,8 @@ object Cli {
   def run(args: Args): Int = {
     var files = args.files
     var mimes: Seq[Option[String]] = files.map(_ => None)
+    // the stdin copy lives as long as this run (or `-i` session) does
+    var stdinCopy: Option[java.nio.file.Path] = None
     try {
       // stdin slurp (reference main.go:484-499). Resolve the type FIRST —
       // `-s` accepts both bare extensions and full MIME strings
@@ -149,6 +151,7 @@ object Cli {
         val mime = Readers.mimeOf(t).getOrElse(
           throw DsqError(s"Unknown mimetype: $t."))
         val tmp = Files.createTempFile("dsq-stdin", s".$mime")
+        stdinCopy = Some(tmp)
         Files.copy(System.in, tmp, StandardCopyOption.REPLACE_EXISTING)
         files = tmp.toString +: files
         mimes = Some(mime) +: mimes
@@ -172,7 +175,7 @@ object Cli {
     } catch {
       case DsqError(msg) => System.err.println(msg); 1
       case e: Exception => System.err.println(errorText(e)); 1
-    }
+    } finally stdinCopy.foreach(Files.deleteIfExists)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.dsq
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** File-format readers (reference §2.1 S1–S17). Each returns the RAW
@@ -189,7 +190,6 @@ object Readers {
       .option("sampleLines", Int.MaxValue.toString)
       .load(path)
 
-  /** Apache error log (reference text/apache2error): regex-per-line. */
   /** Apache error log (reference text/apache2error). Reads via the
     * graft-apacheerror DataSourceV2 source (line-aligned splits,
     * parse-time pruning, 3VL filter pushdown — same chunk framework as
@@ -208,42 +208,13 @@ object Readers {
     * stays "200" and a CLF `-` body size stays "-", exactly as the
     * golden pipes expect.
     */
-  def accessLog(spark: SparkSession, path: String, combined: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val names = Seq("remote_addr", "remote_ident", "remote_user", "time",
-      "request", "status", "body_bytes") ++
-      (if (combined) Seq("referer", "user_agent") else Nil)
+  def accessLog(spark: SparkSession, path: String, combined: Boolean): DataFrame =
     spark.read.format("graft-accesslog")
       .option("combined", combined.toString)
-      .schema(StructType(names.map(StructField(_, StringType, nullable = true))))
+      .schema(StructType(graft.sources.AccessLogFormat.schemaFor(combined)
+        .fields.map(_.copy(dataType = StringType))))
       .load(path)
-  }
 }
 
 /** Engine-level error with the reference's exact message strings. */
 final case class DsqError(message: String) extends RuntimeException(message)
-
-/** logfmt line parser shared by the distributed map. */
-object Logfmt extends Serializable {
-  private val token = "([A-Za-z0-9_.-]+)=(\"(?:[^\"\\\\]|\\\\.)*\"|\\S*)".r
-
-  def lineToJson(line: String): String = {
-    val sb = new StringBuilder("{")
-    var first = true
-    for (m <- token.findAllMatchIn(line)) {
-      val k = m.group(1)
-      val raw = m.group(2)
-      val v =
-        if (raw.startsWith("\"")) raw // already a JSON string with escapes
-        else if (raw == "true" || raw == "false") raw
-        // leading-zero integers ("007") are invalid JSON numbers and
-        // would corrupt the whole row — keep them strings like logfmt does
-        else if (raw.matches("-?(0|[1-9]\\d*)(\\.\\d+)?([eE][+-]?\\d+)?")) raw
-        else "\"" + raw.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      if (!first) sb.append(',')
-      sb.append('"').append(k.replace("\"", "\\\"")).append("\":").append(v)
-      first = false
-    }
-    sb.append('}').toString
-  }
-}

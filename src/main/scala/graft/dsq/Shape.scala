@@ -210,27 +210,18 @@ object Shape {
     Arr(ofAvro(schema))
   }
 
-  private def esc(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** JSON rendering (reference test scripts/test.py:242-266). */
   def toJson(s: Shape, indent: Int = 0): String = {
     val pad = "  " * indent
     val pad1 = "  " * (indent + 1)
     s match {
       case Scalar(n) =>
-        s"{\n${pad1}\"kind\": \"scalar\",\n${pad1}\"scalar\": ${esc(n)}\n$pad}"
+        s"{\n${pad1}\"kind\": \"scalar\",\n${pad1}\"scalar\": ${Output.renderString(n)}\n$pad}"
       case Arr(of) =>
         s"{\n${pad1}\"kind\": \"array\",\n${pad1}\"array\": ${toJson(of, indent + 1)}\n$pad}"
       case Obj(fields) =>
         val inner = fields.map { case (k, v) =>
-          s"${pad1}  ${esc(k)}: ${toJson(v, indent + 2)}"
+          s"${pad1}  ${Output.renderString(k)}: ${toJson(v, indent + 2)}"
         }.mkString(",\n")
         val body = if (fields.isEmpty) "{}" else s"{\n$inner\n$pad1}"
         s"{\n${pad1}\"kind\": \"object\",\n${pad1}\"object\": $body\n$pad}"

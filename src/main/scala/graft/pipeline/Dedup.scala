@@ -1236,8 +1236,6 @@ object Dedup {
       }
       level += 1
     }
-    if (sys.props.contains("graft.cc.debugRounds"))
-      System.err.println(s"[graft] components converged in $level levels")
     result
   }
 

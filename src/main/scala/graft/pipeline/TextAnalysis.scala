@@ -1025,23 +1025,22 @@ object TextAnalysis {
   }
 
   private[graft] def logregFit(docs: DataFrame, steps: Int, lr: Double,
-      posLang: String, langCol: String,
-      textCol: String): (DataFrame, DataFrame) =
+      posLang: String, langCol: String, textCol: String,
+      localBound: Int = LocalLogregBound): (DataFrame, DataFrame) =
     logregFitFromLangFeats(logregLangFeats(docs, langCol, textCol),
-      steps, lr, posLang)
+      steps, lr, posLang, localBound)
 
   /** Row bound under which the gradient loop runs DRIVER-LOCAL (the
     * r14 BPE LocalBpeBound discipline): 2M (y, x0, x1, x2) rows is
     * ~64 MB on the driver, far under any sane driver heap. Past the
-    * bound the distributed loop below runs unchanged. Overridable for
-    * the local==distributed pinning spec via -Dgraft.logreg.localBound.
+    * bound the distributed loop below runs unchanged; `localBound = 0`
+    * forces it (the local==distributed pinning spec).
     */
-  private def logregLocalBound: Int =
-    sys.props.get("graft.logreg.localBound").map(_.toInt)
-      .getOrElse(2000000)
+  private[graft] val LocalLogregBound = 2000000
 
   private[graft] def logregFitFromLangFeats(langFeats: DataFrame,
-      steps: Int, lr: Double, posLang: String): (DataFrame, DataFrame) = {
+      steps: Int, lr: Double, posLang: String,
+      localBound: Int = LocalLogregBound): (DataFrame, DataFrame) = {
     val spark = langFeats.sparkSession
     // y is a cheap projection over the barrier — bit-identical to the
     // old barrier-held y (same when() expression over the same lang)
@@ -1062,14 +1061,13 @@ object TextAnalysis {
     // double→decimal cast yielding null into sum. A spec pins local ==
     // forced-distributed weights bit-for-bit. Corpora past the bound
     // keep the distributed loop unchanged.
-    val bound = logregLocalBound
     val localRows: Array[org.apache.spark.sql.Row] =
-      if (bound <= 0) null
+      if (localBound <= 0) null
       else {
-        val r = feats.limit(bound + 1).collect()
+        val r = feats.limit(localBound + 1).collect()
         // empty corpus falls through to the distributed form so the
         // null-propagating sum-of-nothing semantics stay identical
-        if (r.length > bound || r.isEmpty) null else r
+        if (r.length > localBound || r.isEmpty) null else r
       }
     if (localRows != null) {
       def dec12(v: Double): java.math.BigDecimal =

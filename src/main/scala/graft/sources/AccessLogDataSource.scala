@@ -1,27 +1,14 @@
 package graft.sources
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 source for Apache/nginx access logs (Common and
-  * Combined Log Format — the same grammar the CLI path parses,
-  * `dsq/Readers.accessLog`), built on the logfmt source's chunk
-  * framework: line-aligned byte-range splits, parse-time column
-  * pruning, the same 3VL filter pushdown, and size statistics.
+  * Combined Log Format — the grammar the CLI path reads through,
+  * `dsq/Readers.accessLog`), on the shared line-source stack
+  * ([[LineSource]]): line-aligned byte-range splits, parse-time column
+  * pruning, 3VL filter pushdown, and size statistics.
   *
   * {{{
   *   spark.read.format("graft-accesslog")
@@ -35,176 +22,53 @@ import org.apache.spark.unsafe.types.UTF8String
   * grammar are rejected at parse time (a count of them belongs to a
   * metrics hook, not to the row stream).
   */
-class AccessLogDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-accesslog"
-  override def supportsExternalMetadata(): Boolean = true
+class AccessLogDataSource extends LineSource(AccessLogFormat)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AccessLogDataSource.schemaFor(
-      Option(options.get("combined")).exists(_.toBoolean))
+object AccessLogFormat extends LineFormat {
+  override def name: String = "graft-accesslog"
+  override def fixedColumns: Boolean = true
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    // a user-supplied schema may re-order, prune, or re-type the CLF
-    // columns, but a NAME outside the fixed grammar has no group to bind
-    // (indexOf+1 == 0 would silently bind group(0) — the whole raw line)
-    val opts = new CaseInsensitiveStringMap(properties)
-    val legal = AccessLogDataSource.schemaFor(
-      Option(opts.get("combined")).exists(_.toBoolean)).fieldNames.toSet
-    val unknown = schema.fieldNames.filterNot(legal.contains)
-    require(unknown.isEmpty,
-      s"graft-accesslog: unknown column(s) ${unknown.mkString(", ")}; " +
-        s"the format defines ${legal.mkString(", ")}")
-    new AccessLogTable(schema, opts)
-  }
-}
-
-object AccessLogDataSource {
-  private[sources] val base =
+  private val base =
     "^(\\S+) (\\S+) (\\S+) \\[([^\\]]*)\\] \"([^\"]*)\" (\\S+) (\\S+)"
 
-  private[sources] def regexFor(combined: Boolean): Regex =
-    (if (combined) base + " \"([^\"]*)\" \"([^\"]*)\".*$"
-     else base + ".*$").r
+  private def isCombined(options: CaseInsensitiveStringMap): Boolean =
+    Option(options.get("combined")).exists(_.toBoolean)
 
-  private[sources] val commonFields = Seq(
-    "remote_addr" -> StringType, "remote_ident" -> StringType,
-    "remote_user" -> StringType, "time" -> StringType,
-    "request" -> StringType, "status" -> LongType,
-    "body_bytes" -> LongType)
-
-  private[sources] def schemaFor(combined: Boolean): StructType =
-    StructType((commonFields ++ (if (combined)
+  /** The format's columns, in grammar order: seven Common Log Format
+    * fields, plus referer and user agent when `combined`.
+    */
+  def schemaFor(combined: Boolean): StructType =
+    StructType((Seq(
+      "remote_addr" -> StringType, "remote_ident" -> StringType,
+      "remote_user" -> StringType, "time" -> StringType,
+      "request" -> StringType, "status" -> LongType,
+      "body_bytes" -> LongType) ++ (if (combined)
       Seq("referer" -> StringType, "user_agent" -> StringType)
     else Nil)).map { case (n, t) => StructField(n, t, nullable = true) })
-}
 
-private[sources] class AccessLogTable(tableSchema: StructType,
-    options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String =
-    s"graft-accesslog:${Option(options.get("path")).getOrElse("?")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(
-      caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
-    new AccessLogScanBuilder(tableSchema,
-      new CaseInsensitiveStringMap(merged))
-  }
-}
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    schemaFor(isCombined(options))
 
-private[sources] class AccessLogScanBuilder(fullSchema: StructType,
-    options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = fullSchema
-  private var pushed: Array[sources.Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = StructType(
-      requiredSchema.filter(f => fullSchema.fieldNames.contains(f.name)))
-  override def pushFilters(
-      filters: Array[sources.Filter]): Array[sources.Filter] = {
-    val (accepted, residual) = filters.partition(
-      LogfmtFilters.supported(_, fullSchema))
-    pushed = accepted
-    residual
-  }
-  override def pushedFilters(): Array[sources.Filter] = pushed
-  override def build(): Scan =
-    new AccessLogScan(required, options, pushed, fullSchema)
-}
-
-private[sources] class AccessLogScan(requiredSchema: StructType,
-    options: CaseInsensitiveStringMap,
-    pushedFilters: Array[sources.Filter], fullSchema: StructType)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = requiredSchema
-  override def description(): String =
-    s"graft-accesslog ReadSchema: ${requiredSchema.simpleString}, " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}]"
-  override def toBatch: Batch = this
-
-  private def parseSchema: StructType = {
-    val refs = pushedFilters.flatMap(_.references).distinct
-    val extra = refs.filterNot(requiredSchema.fieldNames.contains)
-      .flatMap(n => fullSchema.fields.find(_.name == n))
-    StructType(requiredSchema.fields ++ extra)
-  }
-
-  override def estimateStatistics(): Statistics = {
-    val conf = LogfmtDataSource.hadoopConf()
-    val bytes = LogfmtDataSource.listFiles(options, conf)
-      .map(_.getLen).sum
-    val ratio =
-      if (fullSchema.isEmpty) 1.0
-      else math.max(1, requiredSchema.length).toDouble / fullSchema.length
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(1L, (bytes * ratio).toLong))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = LogfmtDataSource.hadoopConf()
-    LogfmtDataSource.chunksOf(LogfmtDataSource.listFiles(options, conf),
-      LogfmtDataSource.splitBytesOf(options))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(LogfmtDataSource.hadoopConf())
-    val combined = Option(options.get("combined")).exists(_.toBoolean)
-    val schema = parseSchema
-    val nOut = requiredSchema.length
-    val filters = pushedFilters
-    new PartitionReaderFactory {
-      override def createReader(
-          partition: InputPartition): PartitionReader[InternalRow] =
-        new AccessLogPartitionReader(
-          partition.asInstanceOf[LogfmtChunk], schema, conf.value,
-          combined, filters, nOut)
-    }
-  }
-}
-
-private[sources] class AccessLogPartitionReader(chunk: LogfmtChunk,
-    schema: StructType, conf: Configuration, combined: Boolean,
-    filters: Array[sources.Filter], nOut: Int)
-    extends ChunkLineReader(chunk, conf) {
-
-  private val re = AccessLogDataSource.regexFor(combined)
-  // grammar position of each required field
-  private val fullNames = AccessLogDataSource.schemaFor(combined)
-    .fieldNames
-  private val slots: Array[Int] =
-    schema.fieldNames.map(n => fullNames.indexOf(n) + 1)
-  private val fieldIdx: Map[String, Int] =
-    schema.fieldNames.zipWithIndex.toMap
-
-  override protected def parseLine(line: String): InternalRow = {
-    val m = re.findFirstMatchIn(line).orNull
-    if (m == null) return null // non-matching line: rejected, not a row
-    val values = new Array[Any](schema.length)
-    var i = 0
-    while (i < slots.length) {
-      val g = m.group(slots(i))
-      values(i) = schema.fields(i).dataType match {
-        case LongType =>
+  override def parser(schema: StructType,
+      options: CaseInsensitiveStringMap): String => Array[Any] = {
+    val combined = isCombined(options)
+    val re = (if (combined) base + " \"([^\"]*)\" \"([^\"]*)\".*$"
+      else base + ".*$").r
+    // grammar group of each parsed field
+    val full = schemaFor(combined).fieldNames
+    val slots = schema.fieldNames.map(full.indexOf(_) + 1)
+    val types = schema.fields.map(_.dataType)
+    line => re.findFirstMatchIn(line) match {
+      case None => null // non-matching line: rejected, not a row
+      case Some(m) => Array.tabulate[Any](slots.length) { i =>
+        val g = m.group(slots(i))
+        types(i) match {
           // CLF writes '-' for "no value" (body_bytes of a 304, etc.)
-          if (g == "-") null else scala.util.Try(g.toLong).getOrElse(null)
-        case _ => UTF8String.fromString(g)
+          case LongType =>
+            if (g == "-") null else scala.util.Try(g.toLong).getOrElse(null)
+          case _ => UTF8String.fromString(g)
+        }
       }
-      i += 1
     }
-    if (!filters.forall(LogfmtFilters.eval(_, k =>
-        fieldIdx.get(k).map(values(_)).orNull))) return null
-    new GenericInternalRow(
-      if (nOut == values.length) values
-      else java.util.Arrays.copyOfRange(
-        values.asInstanceOf[Array[AnyRef]], 0, nOut)
-        .asInstanceOf[Array[Any]])
   }
 }

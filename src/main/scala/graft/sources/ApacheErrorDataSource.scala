@@ -1,26 +1,13 @@
 package graft.sources
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 source for the Apache error-log format (reference
-  * `text/apache2error`, README.md:609) — the last regex-line format to
-  * ride the logfmt chunk framework: line-aligned byte-range splits,
-  * parse-time column pruning, 3VL filter pushdown, size statistics.
+  * `text/apache2error`, README.md:609), on the shared line-source stack
+  * ([[LineSource]]): line-aligned byte-range splits, parse-time column
+  * pruning, 3VL filter pushdown, size statistics.
   *
   * {{{
   *   spark.read.format("graft-apacheerror").load("/var/log/apache2")
@@ -36,155 +23,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * (contrast the access-log source, whose grammar anchors the whole
   * line and rejects non-matching ones).
   */
-class ApacheErrorDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-apacheerror"
-  override def supportsExternalMetadata(): Boolean = true
+class ApacheErrorDataSource extends LineSource(ApacheErrorFormat)
+
+private[sources] object ApacheErrorFormat extends LineFormat {
+  override def name: String = "graft-apacheerror"
+  override def fixedColumns: Boolean = true
+
+  private val fieldNames = Seq("time", "level", "pid", "client", "message")
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ApacheErrorDataSource.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val legal = ApacheErrorDataSource.schema.fieldNames.toSet
-    val unknown = schema.fieldNames.filterNot(legal.contains)
-    require(unknown.isEmpty,
-      s"graft-apacheerror: unknown column(s) ${unknown.mkString(", ")}; " +
-        s"the format defines ${legal.mkString(", ")}")
-    new ApacheErrorTable(schema, new CaseInsensitiveStringMap(properties))
-  }
-}
-
-object ApacheErrorDataSource {
-  /** Same grammar as the CLI path (dsq/Readers.apacheError). */
-  private[sources] val regex: Regex =
-    ("^\\[([^\\]]*)\\] \\[([^\\]]*)\\] (?:\\[pid ([^\\]]*)\\] )?" +
-      "(?:\\[client ([^\\]]*)\\] )?(.*)$").r
-
-  private[sources] val fieldNames =
-    Seq("time", "level", "pid", "client", "message")
-
-  private[sources] val schema: StructType =
     StructType(fieldNames.map(StructField(_, StringType, nullable = true)))
-}
 
-private[sources] class ApacheErrorTable(tableSchema: StructType,
-    options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String =
-    s"graft-apacheerror:${Option(options.get("path")).getOrElse("?")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(
-      caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
-    new ApacheErrorScanBuilder(tableSchema,
-      new CaseInsensitiveStringMap(merged))
-  }
-}
-
-private[sources] class ApacheErrorScanBuilder(fullSchema: StructType,
-    options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = fullSchema
-  private var pushed: Array[sources.Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = StructType(
-      requiredSchema.filter(f => fullSchema.fieldNames.contains(f.name)))
-  override def pushFilters(
-      filters: Array[sources.Filter]): Array[sources.Filter] = {
-    val (accepted, residual) = filters.partition(
-      LogfmtFilters.supported(_, fullSchema))
-    pushed = accepted
-    residual
-  }
-  override def pushedFilters(): Array[sources.Filter] = pushed
-  override def build(): Scan =
-    new ApacheErrorScan(required, options, pushed, fullSchema)
-}
-
-private[sources] class ApacheErrorScan(requiredSchema: StructType,
-    options: CaseInsensitiveStringMap,
-    pushedFilters: Array[sources.Filter], fullSchema: StructType)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = requiredSchema
-  override def description(): String =
-    s"graft-apacheerror ReadSchema: ${requiredSchema.simpleString}, " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}]"
-  override def toBatch: Batch = this
-
-  private def parseSchema: StructType = {
-    val refs = pushedFilters.flatMap(_.references).distinct
-    val extra = refs.filterNot(requiredSchema.fieldNames.contains)
-      .flatMap(n => fullSchema.fields.find(_.name == n))
-    StructType(requiredSchema.fields ++ extra)
-  }
-
-  override def estimateStatistics(): Statistics = {
-    val conf = LogfmtDataSource.hadoopConf()
-    val bytes = LogfmtDataSource.listFiles(options, conf)
-      .map(_.getLen).sum
-    val ratio =
-      if (fullSchema.isEmpty) 1.0
-      else math.max(1, requiredSchema.length).toDouble / fullSchema.length
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(1L, (bytes * ratio).toLong))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = LogfmtDataSource.hadoopConf()
-    LogfmtDataSource.chunksOf(LogfmtDataSource.listFiles(options, conf),
-      LogfmtDataSource.splitBytesOf(options))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(LogfmtDataSource.hadoopConf())
-    val schema = parseSchema
-    val nOut = requiredSchema.length
-    val filters = pushedFilters
-    new PartitionReaderFactory {
-      override def createReader(
-          partition: InputPartition): PartitionReader[InternalRow] =
-        new ApacheErrorPartitionReader(
-          partition.asInstanceOf[LogfmtChunk], schema, conf.value,
-          filters, nOut)
-    }
-  }
-}
-
-private[sources] class ApacheErrorPartitionReader(chunk: LogfmtChunk,
-    schema: StructType, conf: Configuration,
-    filters: Array[sources.Filter], nOut: Int)
-    extends ChunkLineReader(chunk, conf) {
-
-  private val slots: Array[Int] = schema.fieldNames
-    .map(n => ApacheErrorDataSource.fieldNames.indexOf(n) + 1)
-  private val fieldIdx: Map[String, Int] =
-    schema.fieldNames.zipWithIndex.toMap
-  private val empty = UTF8String.fromString("")
-
-  override protected def parseLine(line: String): InternalRow = {
-    val m = ApacheErrorDataSource.regex.findFirstMatchIn(line).orNull
-    val values = new Array[Any](schema.length)
-    var i = 0
-    while (i < slots.length) {
+  override def parser(schema: StructType,
+      options: CaseInsensitiveStringMap): String => Array[Any] = {
+    val re = ("^\\[([^\\]]*)\\] \\[([^\\]]*)\\] (?:\\[pid ([^\\]]*)\\] )?" +
+      "(?:\\[client ([^\\]]*)\\] )?(.*)$").r
+    val slots = schema.fieldNames.map(fieldNames.indexOf(_) + 1)
+    line => {
+      val m = re.findFirstMatchIn(line).orNull
       // no match / absent optional section → "" (regexp_extract + Go
       // submatch convention; see class scaladoc)
-      val g = if (m == null) null else m.group(slots(i))
-      values(i) = if (g == null) empty else UTF8String.fromString(g)
-      i += 1
+      Array.tabulate[Any](slots.length) { i =>
+        val g = if (m == null) null else m.group(slots(i))
+        UTF8String.fromString(if (g == null) "" else g)
+      }
     }
-    if (!filters.forall(LogfmtFilters.eval(_, k =>
-        fieldIdx.get(k).map(values(_)).orNull))) return null
-    new GenericInternalRow(
-      if (nOut == values.length) values
-      else java.util.Arrays.copyOfRange(
-        values.asInstanceOf[Array[AnyRef]], 0, nOut)
-        .asInstanceOf[Array[Any]])
   }
 }

@@ -550,6 +550,35 @@ class CliPipeSpec extends SparkSpec {
       java.nio.file.Files.deleteIfExists(f)
     }
   }
+
+  test("a piped -s run deletes its stdin copy, with and without -C") {
+    val f = java.nio.file.Files.createTempFile("stdin-leak", ".csv")
+    val tag = java.lang.Long.toHexString(System.nanoTime())
+    java.nio.file.Files.writeString(f, s"a,b\n1,p$tag\n")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stdinCopies(): Int =
+      tmp.listFiles().count(_.getName.startsWith("dsq-stdin"))
+    val before = stdinCopies()
+    val oldErr = System.err
+    System.setErr(new java.io.PrintStream(new java.io.ByteArrayOutputStream()))
+    try {
+      for (flags <- Seq(Seq("-s", "csv"), Seq("-C", "-s", "csv"))) {
+        val (code, out) =
+          runCli((flags :+ "SELECT COUNT(1) AS n FROM {}").toArray, f.toString)
+        assert(code == 0, s"exit $code, out: $out")
+        assert(stdinCopies() == before, s"$flags left a dsq-stdin copy")
+      }
+      // a failing query removes its copy too
+      val (code, _) = runCli(Array("-s", "csv", "SELECT nope FROM {}"),
+        f.toString)
+      assert(code == 1)
+      assert(stdinCopies() == before, "a failed run left a dsq-stdin copy")
+    } finally {
+      System.setErr(oldErr)
+      graft.Scratch.rmTree(ContentHashCache.dirFor(Seq(f.toString), false).toFile)
+      java.nio.file.Files.deleteIfExists(f)
+    }
+  }
 }
 
 /** strftime / date UDF logic. */

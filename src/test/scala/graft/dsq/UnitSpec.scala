@@ -75,27 +75,12 @@ class UnitSpec extends SparkSpec {
       "Array of\n  Object of\n    a of\n      string\n")
   }
 
-  test("logfmt parser: quoted values, numbers, booleans") {
-    val json = Logfmt.lineToJson(
-      """time="2015-03-26T01:27:38-04:00" level=debug msg="a \"b\" c" n=8 neg=-4 f=1.5 b=true bare""")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(json)
-    assert(node.get("level").asText == "debug")
-    assert(node.get("msg").asText == "a \"b\" c")
-    assert(node.get("n").asInt == 8)
-    assert(node.get("neg").asInt == -4)
-    assert(node.get("f").asDouble == 1.5)
-    assert(node.get("b").asBoolean)
-  }
-
-  test("logfmt leading-zero values stay strings (valid JSON)") {
-    val json = Logfmt.lineToJson("user=alice pid=007 ok=0 n=10")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(json)
-    assert(node.get("pid").asText == "007")
-    assert(node.get("pid").isTextual)
-    assert(node.get("ok").asInt == 0)
-    assert(node.get("n").asInt == 10)
+  test("shape JSON escapes a tab in a key as \\t, like the data output") {
+    val shape = Shape.Arr(Shape.Obj(Seq("a\tb" -> Shape.Scalar("string"))))
+    val json = Shape.toJson(shape)
+    assert(json.contains("\"a\\tb\""), json)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(node.get("array").get("object").fieldNames().next() == "a\tb")
   }
 
   test("json output renders arrays and structs as JSON") {

@@ -244,20 +244,14 @@ class PipelineSpec extends SparkSpec {
       val lang = if (i % 3 == 0) "en" else if (i % 3 == 1) "de" else "fr"
       (i.toLong, lang, ("w" + i + " ") * (1 + i % 37))
     }.toDF("doc_id", "lang", "text")
-    def fitW(): Array[Double] = {
+    def fitW(localBound: Int): Array[Double] = {
       val (_, w) = graft.pipeline.TextAnalysis.logregFit(
-        docs, steps = 3, lr = 1.0, "en", "lang", "text")
+        docs, steps = 3, lr = 1.0, "en", "lang", "text", localBound)
       val r = w.collect().head
       Array(r.getDouble(0), r.getDouble(1), r.getDouble(2))
     }
-    val local = fitW()
-    val prev = sys.props.put("graft.logreg.localBound", "0")
-    val dist =
-      try fitW()
-      finally prev match {
-        case Some(v) => sys.props.put("graft.logreg.localBound", v); ()
-        case None => sys.props.remove("graft.logreg.localBound"); ()
-      }
+    val local = fitW(graft.pipeline.TextAnalysis.LocalLogregBound)
+    val dist = fitW(localBound = 0)
     assert(local.toSeq == dist.toSeq,
       s"local ${local.toSeq} != distributed ${dist.toSeq}")
     assert(local.exists(_ != 0.0), "degenerate fit (all-zero weights)")

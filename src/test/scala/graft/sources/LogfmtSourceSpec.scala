@@ -183,12 +183,14 @@ class LogfmtSourceSpec extends SparkSpec {
     Files.writeString(dir.resolve("b.logfmt"), "")
     val df = spark.read.format("graft-logfmt").load(dir.toString)
     assert(df.count() == 1)
-    // missing path option → clear error, not an NPE
-    val e = intercept[Exception] {
-      spark.read.format("graft-logfmt")
-        .option("sampleLines", "10").load()
+    // missing path option → a clear error naming the format read, not
+    // an NPE
+    for (f <- Seq("graft-logfmt", "graft-accesslog", "graft-apacheerror")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format(f).option("sampleLines", "10").load()
+      }
+      assert(e.getMessage == s"$f: 'path' option is required", e.getMessage)
     }
-    assert(e.getMessage != null)
     // user schema skips sampling and wins over inference
     import org.apache.spark.sql.types._
     val forced = spark.read.format("graft-logfmt")
@@ -216,8 +218,21 @@ class LogfmtSourceSpec extends SparkSpec {
     // the micro-batch stream still reads a missing directory as no files
     val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("path", missing))
-    val stream = new LogfmtMicroBatchStream(new LogfmtScan(StructType(Nil), opts), opts)
+    val stream = new LogfmtMicroBatchStream(
+      new LineScan(LogfmtFormat, StructType(Nil), opts, Array.empty, StructType(Nil)))
     assert(stream.latestOffset() == LogfmtOffset(""))
+  }
+
+  test("only graft-logfmt streams: readStream on the fixed-schema formats fails") {
+    val dir = writeLogfmt("nostream", Seq("k=1"))
+    for (f <- Seq("graft-accesslog", "graft-apacheerror")) {
+      val e = intercept[UnsupportedOperationException](
+        spark.readStream.format(f).load(dir))
+      assert(e.getMessage.contains("does not support streamed reading"),
+        e.getMessage)
+    }
+    assert(spark.readStream.format("graft-logfmt")
+      .schema("k BIGINT").load(dir).isStreaming)
   }
 
   test("sampleLines=max: distributed whole-file union sees a last-line key") {
@@ -266,11 +281,15 @@ class LogfmtSourceSpec extends SparkSpec {
     // '0123' and '+5' are outside the JSON-number grammar: inference
     // makes such a column a STRING, and under a forced numeric schema
     // the same tokens degrade to null — never a silent toLong parse
-    val dir = writeLogfmt("grammar", Seq("v=0123 w=+5 x=42"))
+    val dir = writeLogfmt("grammar", Seq("v=0123 w=+5 x=42 neg=-4 bare"))
     val inferred = spark.read.format("graft-logfmt").load(dir)
     assert(inferred.schema("v").dataType == StringType)
     assert(inferred.schema("w").dataType == StringType)
     assert(inferred.schema("x").dataType == LongType)
+    // a negative integer is in the grammar; a token with no '=' is skipped
+    assert(inferred.schema("neg").dataType == LongType)
+    assert(inferred.head().getAs[Long]("neg") == -4L)
+    assert(!inferred.schema.fieldNames.contains("bare"))
     val forced = spark.read.format("graft-logfmt")
       .schema(StructType(Seq(
         StructField("v", LongType), StructField("w", LongType),
@@ -294,11 +313,10 @@ class LogfmtSourceSpec extends SparkSpec {
       assert(parsed == name, s"Jackson decode mismatch for $name: $json")
       // and the stream's own decoder agrees
       val back = new LogfmtMicroBatchStream(
-        new LogfmtScan(StructType(Nil),
+        new LineScan(LogfmtFormat, StructType(Nil),
           new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-            java.util.Map.of("path", "/nonexistent"))),
-        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("path", "/nonexistent")))
+            java.util.Map.of("path", "/nonexistent")),
+          Array.empty, StructType(Nil)))
         .deserializeOffset(json)
       assert(back.asInstanceOf[LogfmtOffset].maxName == name)
     }
